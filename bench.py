@@ -5,32 +5,47 @@ Prints ONE JSON line:
   {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 Timing discipline per BASELINE.md: one shared warm session (JVM startup
-excluded). TWO execution metrics per tier, so neither story hides the
-other:
-  - "queries"/"value" — best warm re-execution of the PREPARED plan
-    (same DataFrame object). Spark reuses completed shuffle map stages
-    across runs, so this is the latency floor of a prepared,
-    partially-materialized plan — the recurring cost where plans are
-    built once and re-run;
-  - "fresh_queries"/"fresh_value" — a FRESH DataFrame per run (new
-    lineage, every stage re-executes; tools/scale_probe.py's standard),
-    action-only timing. This is the full-work number comparable to
-    DuckDB's warm re-execution, which always re-runs its operators.
-Plan construction cost (Python → JVM analysis round-trips, paid once
-per query shape) is reported separately as plan_build_total_sec; the
-DuckDB equivalent (SQL parse) is sub-ms and inside its numbers.
+excluded); every timing goes through nipd_spark.profile.time_runs. Each
+metric's methodology:
+  - "queries"/"value" — the PREPARED plan: built once, then 1 cold run
+    plus N-1 warm Arrow collects of the same DataFrame; the min of the
+    warm runs. Spark reuses completed shuffle map stages across runs,
+    so this is the latency floor of a prepared, partially-materialized
+    plan — the recurring cost where plans are built once and re-run;
+  - "plan_build_total_sec" — the sum of those one-off builds (Python →
+    JVM analysis round-trips, plus any jobs a query fires while
+    building); the DuckDB equivalent (SQL parse) is sub-ms and inside
+    its numbers;
+  - "fresh_queries"/"fresh_value" — 1 warm-up, then N runs on a FRESH
+    DataFrame each (new lineage, every stage re-executes), timing the
+    Arrow collect only; the min. The full-work number comparable to
+    DuckDB's warm re-execution, which always re-runs its operators;
+  - "fresh_noop_queries"/"fresh_noop_value" — the same with the noop
+    sink: every column of every row is computed and discarded, so
+    Arrow collection of the result set is excluded (o4's 100× fresh
+    number proved to be ~70% driver-side collection of its 4.5M-row
+    result);
+  - "duckdb_queries"/"duckdb_value" — the DuckDB twins on the same
+    parquet dir (scale tiers only): N executes, the first untimed; the
+    min of the rest;
+  - "noop_floor_sec", "calib_jvm_sec", "calib_duckdb_sec" — host-drift
+    normalizers with zero repo code (see _calibrate), measured the same
+    way: N runs, the first untimed; the min of the rest.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import subprocess
 import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, REPO)
 
 from nipd_spark import registry
+from nipd_spark.catalog import TABLES
+from nipd_spark.profile import collect, duck_execute, noop, time_runs
 from nipd_spark.session import get_spark
 
 # registry name -> short bench key (mirrors BASELINE.md rows)
@@ -45,12 +60,33 @@ HEADLINE = [
 ]
 
 
-TIER16_DIR = "/tmp/nipd_scale16"
-TIER100_DIR = "/tmp/nipd_scale100"
-TIER16_TABLES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
+# Key-shifted replicas of sf0.1 (tools/gen_scale.py), one row per tier:
+# (out key, copies, dir, env switch, generation timeout s, warm runs,
+#  DuckDB runs, note). At sf0.1 several headline queries are
+# floor-bound — Spark's fixed per-action cost (~0.04 s) dwarfs ~6 ms
+# of work — so the 16× tier (VERDICT r8 item 6) makes work dominate.
+# The 100× tier (VERDICT r9 item 3; ~sf10: 600M lineitem rows) is
+# where the single-threaded-ingest portions of DuckDB's plans dominate
+# (topk_window's twin was already 1.9 s at 16×): the twin becomes a
+# documentation row quantifying when the distributed plan's constant
+# factors amortize.
+TIERS = (
+    ("tier16x", 16, "/tmp/nipd_scale16", "NIPD_BENCH_TIER16", 600, 4, 4, None),
+    (
+        "tier100x", 100, "/tmp/nipd_scale100", "NIPD_BENCH_TIER100", 1200, 3, 2,
+        "DuckDB twin re-measured at 100x for scaling documentation; "
+        "single-node warm-best stops being a like-for-like baseline at "
+        "this tier",
+    ),
 )
+
+# Scale-tier exclusions: l4 is the exact O(n²) GEMM correctness ANCHOR —
+# its cost is quadratic by definition (32k² = 1B pair dot products at
+# 16×, and its DuckDB twin is far worse), and its scale path is the
+# IVF/LSH candidate-set tier (CLAUDE.md; SCALE.md). Benching the anchor
+# at 16× would measure the quadratic wall both repos deliberately route
+# around, not engine efficiency.
+TIER16_SKIP = {"knn_cosine"}
 
 
 def _ensure_scale(n: int, out_dir: str, timeout: int) -> str | None:
@@ -58,24 +94,11 @@ def _ensure_scale(n: int, out_dir: str, timeout: int) -> str | None:
     runs; 16× ≈ 280 MB / ~1 min, 100× ≈ 1.8 GB / ~6 min one-off). None
     on any failure — scale tiers are additive, never allowed to sink
     the headline run."""
-    import subprocess
-
-    if all(
-        os.path.exists(f"{out_dir}/{t}.parquet") for t in TIER16_TABLES
-    ):
+    if all(os.path.exists(f"{out_dir}/{t}.parquet") for t in TABLES):
         return out_dir
     try:
         subprocess.run(
-            [
-                sys.executable,
-                os.path.join(
-                    os.path.dirname(os.path.abspath(__file__)),
-                    "tools",
-                    "gen_scale.py",
-                ),
-                str(n),
-                out_dir,
-            ],
+            [sys.executable, f"{REPO}/tools/gen_scale.py", str(n), out_dir],
             check=True,
             capture_output=True,
             timeout=timeout,
@@ -85,117 +108,50 @@ def _ensure_scale(n: int, out_dir: str, timeout: int) -> str | None:
         return None
 
 
-def _ensure_scale16() -> str | None:
-    return _ensure_scale(16, TIER16_DIR, 600)
+def _best(runs) -> float:
+    return round(min(runs.times), 4)
 
 
-# 16× exclusions: l4 is the exact O(n²) GEMM correctness ANCHOR — its
-# cost is quadratic by definition (32k² = 1B pair dot products at 16×,
-# and its DuckDB twin is far worse), and its scale path is the IVF/LSH
-# candidate-set tier (CLAUDE.md; SCALE.md). Benching the anchor at 16×
-# would measure the quadratic wall both repos deliberately route
-# around, not engine efficiency.
-TIER16_SKIP = {"knn_cosine"}
+def _headline(specs, skip):
+    """(bench key, spec) for each headline query present and not skipped."""
+    for name, key in HEADLINE:
+        spec = specs.get(name)
+        if spec is not None and key not in skip:
+            yield key, spec
 
 
 def _bench_specs(spark, specs, sf_dir, n_runs, skip=frozenset()):
-    """Best-warm execution per headline query (1 cold + n_runs-1 warm).
-
-    NOTE on what this measures: re-executing the SAME DataFrame object
-    lets Spark reuse completed shuffle map stages, so warm runs time
-    the post-shuffle stages + result collection — the latency floor of
-    a prepared, partially-materialized plan. The full-work numbers
-    (fresh lineage per run, every stage re-executed — the
-    tools/scale_probe.py standard) are reported alongside in the
-    "fresh" sections so neither story hides the other."""
+    """Prepared-plan warm minimum per query, and the summed build time."""
     timings: dict[str, float] = {}
     build = 0.0
-    for name, key in HEADLINE:
-        spec = specs.get(name)
-        if spec is None or key in skip:
-            continue
-        t0 = time.time()
-        df = spec.fn(spark, sf_dir)  # prepared plan, built once
-        build += time.time() - t0
-        runs = []
-        for _ in range(n_runs):
-            t0 = time.time()
-            df.toPandas()
-            runs.append(time.time() - t0)
-        timings[key] = round(min(runs[1:]), 4)
+    for key, spec in _headline(specs, skip):
+        r = time_runs(lambda: spec.fn(spark, sf_dir), collect, n_runs - 1, reuse=True)
+        build += r.build_s
+        timings[key] = _best(r)
     return timings, build
 
 
-def _bench_specs_fresh(spark, specs, sf_dir, n_runs, skip=frozenset()):
-    """Full-work execution: a FRESH DataFrame per run (new RDD lineage,
-    so no shuffle-stage reuse — every stage re-executes, comparable to
-    DuckDB's warm re-execution), timing the action only (plan
-    construction is Python->JVM analysis chatter, reported once via
-    plan_build_total_sec)."""
-    timings: dict[str, float] = {}
-    for name, key in HEADLINE:
-        spec = specs.get(name)
-        if spec is None or key in skip:
-            continue
-        spec.fn(spark, sf_dir).toPandas()  # warm-up: footers, JIT
-        runs = []
-        for _ in range(n_runs):
-            df = spec.fn(spark, sf_dir)
-            t0 = time.time()
-            df.toPandas()
-            runs.append(time.time() - t0)
-        timings[key] = round(min(runs), 4)
-    return timings
-
-
-def _bench_specs_fresh_noop(spark, specs, sf_dir, n_runs, skip=frozenset()):
-    """Compute-only twin of the fresh metric (r12 optimization round,
-    guide §1.4): same fresh lineage per run, but the action is the noop
-    sink — every column of every row is computed and discarded, so the
-    number excludes Arrow collection of the result set. Added because
-    o4's 100× fresh number proved to be ~70% driver-side collection of
-    its 4.5M-row result (noisy ±2×), which buried the engine's actual
-    compute scaling. ADDITIVE metric: the existing queries/fresh_queries
-    keys keep their exact methodology."""
-    timings: dict[str, float] = {}
-    for name, key in HEADLINE:
-        spec = specs.get(name)
-        if spec is None or key in skip:
-            continue
-        # warm-up (r13, mirrors _bench_specs_fresh): footers/JIT/broadcast
-        # caches — without it a standalone or reordered call folds
-        # cold-start into the min-of-n number
-        spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        runs = []
-        for _ in range(n_runs):
-            df = spec.fn(spark, sf_dir)
-            t0 = time.time()
-            df.write.format("noop").mode("overwrite").save()
-            runs.append(time.time() - t0)
-        timings[key] = round(min(runs), 4)
-    return timings
+def _bench_fresh(spark, specs, sf_dir, n_runs, sink, skip=frozenset()):
+    """Fresh-lineage minimum per query, timing ``sink`` only."""
+    return {
+        key: _best(time_runs(lambda: spec.fn(spark, sf_dir), sink, n_runs))
+        for key, spec in _headline(specs, skip)
+    }
 
 
 def _bench_duck(specs, sf_dir, n_runs, skip=frozenset()):
-    """DuckDB oracle twins on the same parquet dir — the warm-best
-    baseline methodology of BASELINE.md, re-measured at this tier so
-    the ratio is work-vs-work, not Spark's ~0.04 s local-mode action
-    floor vs sub-ms DuckDB dispatch."""
+    """DuckDB twins on the same parquet dir — the warm-best baseline
+    methodology of BASELINE.md, re-measured at this tier so the ratio
+    is work-vs-work, not Spark's ~0.04 s local-mode action floor vs
+    sub-ms DuckDB dispatch."""
     from nipd_spark.testing import make_duck
 
-    con = make_duck(sf_dir)
-    timings: dict[str, float] = {}
-    for name, key in HEADLINE:
-        spec = specs.get(name)
-        if spec is None or not spec.sql or key in skip:
-            continue
-        runs = []
-        for _ in range(n_runs):
-            t0 = time.time()
-            con.execute(spec.sql).fetch_arrow_table()
-            runs.append(time.time() - t0)
-        timings[key] = round(min(runs[1:]), 4)
-    return timings
+    run = duck_execute(make_duck(sf_dir))
+    return {
+        key: _best(time_runs(lambda: spec.sql, run, n_runs - 1))
+        for key, spec in _headline(specs, skip)
+        if spec.sql
+    }
 
 
 def _calibrate(spark) -> dict[str, float]:
@@ -216,40 +172,55 @@ def _calibrate(spark) -> dict[str, float]:
       - calib_duckdb_sec: the DuckDB twin of the same hash-sum loop,
         normalizing the baseline side identically.
     """
+    import duckdb
     from pyspark.sql import functions as F
 
-    floor_df = spark.range(0, 3600, 1, 1).select(
-        F.col("id"), F.xxhash64("id").alias("h")
+    floor = time_runs(
+        lambda: spark.range(0, 3600, 1, 1).select(
+            F.col("id"), F.xxhash64("id").alias("h")
+        ),
+        collect, 9, reuse=True,
     )
-    floor_runs = []
-    for _ in range(10):
-        t0 = time.time()
-        floor_df.toPandas()
-        floor_runs.append(time.time() - t0)
-    jvm_runs = []
-    for _ in range(6):
-        df = spark.range(0, 64_000_000, 1, 32).select(
+    jvm = time_runs(
+        lambda: spark.range(0, 64_000_000, 1, 32).select(
             # pmod keeps the ANSI sum far from long overflow
             F.sum(F.pmod(F.xxhash64("id"), F.lit(1000))).alias("s")
-        )
-        t0 = time.time()
-        df.toPandas()
-        jvm_runs.append(time.time() - t0)
-    import duckdb
-
-    con = duckdb.connect()
-    duck_runs = []
-    for _ in range(4):
-        t0 = time.time()
-        con.execute(
-            "SELECT sum(hash(r) % 1000) FROM range(64000000) t(r)"
-        ).fetch_arrow_table()
-        duck_runs.append(time.time() - t0)
+        ),
+        collect, 5,
+    )
+    duck = time_runs(
+        lambda: "SELECT sum(hash(r) % 1000) FROM range(64000000) t(r)",
+        duck_execute(duckdb.connect()), 3,
+    )
     return {
-        "noop_floor_sec": round(min(floor_runs[1:]), 4),
-        "calib_jvm_sec": round(min(jvm_runs[1:]), 4),
-        "calib_duckdb_sec": round(min(duck_runs[1:]), 4),
+        "noop_floor_sec": _best(floor),
+        "calib_jvm_sec": _best(jvm),
+        "calib_duckdb_sec": _best(duck),
     }
+
+
+def _bench_tier(spark, specs, sf_dir, copies, n_warm, n_duck, note):
+    """One scale tier: the three Spark metrics plus the DuckDB twins."""
+    q, _ = _bench_specs(spark, specs, sf_dir, n_warm, TIER16_SKIP)
+    f = _bench_fresh(spark, specs, sf_dir, 2, collect, TIER16_SKIP)
+    fn = _bench_fresh(spark, specs, sf_dir, 2, noop, TIER16_SKIP)
+    d = _bench_duck(specs, sf_dir, n_duck, TIER16_SKIP)
+    out = {
+        "sf_dir": sf_dir,
+        "copies_of_sf0.1": copies,
+        "value": round(sum(q.values()), 4),
+        "queries": q,
+        "fresh_value": round(sum(f.values()), 4),
+        "fresh_queries": f,
+        "fresh_noop_value": round(sum(fn.values()), 4),
+        "fresh_noop_queries": fn,
+        "skipped": sorted(TIER16_SKIP),
+        "duckdb_value": round(sum(d.values()), 4),
+        "duckdb_queries": d,
+    }
+    if note:
+        out["note"] = note
+    return out
 
 
 def main() -> None:
@@ -259,31 +230,26 @@ def main() -> None:
     specs = registry.all_specs()
     calib = _calibrate(spark)
     timings, build_total = _bench_specs(spark, specs, sf_dir, n_runs=8)
-    fresh = _bench_specs_fresh(spark, specs, sf_dir, n_runs=2)
+    fresh = _bench_fresh(spark, specs, sf_dir, 2, collect)
     # compute-only split at the HEADLINE sf too (r13, VERDICT r12 item 2):
     # the warm per-query values sit at/below the measured noop_floor_sec,
     # so the longitudinal regression/scaling flags computed on them read
     # collection latency, not the engine. fresh_noop is the floor-proof
-    # twin. ADDITIVE key — queries/fresh_queries keep their methodology.
-    fresh_noop = _bench_specs_fresh_noop(spark, specs, sf_dir, n_runs=3)
+    # twin.
+    fresh_noop = _bench_fresh(spark, specs, sf_dir, 3, noop)
     out = {
         "metric": "headline_warm_total",
         "value": round(sum(timings.values()), 4),
         "unit": "sec",
         "queries": timings,
         "plan_build_total_sec": round(build_total, 4),
-        # full-work twin of the headline: fresh lineage per run, no
-        # shuffle-stage reuse — the scale_probe standard, so the
-        # prepared-plan floor above and the every-stage cost are BOTH
-        # on the record (the 16x/100x tiers carry the same pair)
         "fresh_value": round(sum(fresh.values()), 4),
         "fresh_queries": fresh,
         "fresh_noop_value": round(sum(fresh_noop.values()), 4),
         "fresh_noop_queries": fresh_noop,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        # host-drift attribution: fixed workloads with zero repo code
-        # (see _calibrate) — compare these across BENCH_r{N}.json before
-        # reading a headline delta as an engine change
+        # compare these across BENCH_r{N}.json before reading a headline
+        # delta as an engine change
         **calib,
     }
     # Floor-bound declaration (r13): a warm per-query value within 2x of
@@ -293,79 +259,16 @@ def main() -> None:
     out["warm_floor_bound_queries"] = sorted(
         k for k, v in timings.items() if v <= 2 * calib["noop_floor_sec"]
     )
-    # 16× tier (VERDICT r8 item 6): at sf0.1 several headline queries
-    # are floor-bound — Spark's fixed per-action cost (~0.04 s on this
-    # host) dwarfs ~6 ms of work, so their ratio measures scheduling
-    # constants that amortize at any real scale. 16× makes work
-    # dominate; DuckDB twins re-measured on the same replica.
-    if os.environ.get("NIPD_BENCH_TIER16", "1") != "0":
-        t16 = _ensure_scale16()
-        if t16 is not None:
-            try:
-                q16, _ = _bench_specs(spark, specs, t16, n_runs=4, skip=TIER16_SKIP)
-                f16 = _bench_specs_fresh(spark, specs, t16, n_runs=2, skip=TIER16_SKIP)
-                fn16 = _bench_specs_fresh_noop(
-                    spark, specs, t16, n_runs=2, skip=TIER16_SKIP
-                )
-                d16 = _bench_duck(specs, t16, n_runs=4, skip=TIER16_SKIP)
-                out["tier16x"] = {
-                    "sf_dir": t16,
-                    "copies_of_sf0.1": 16,
-                    "value": round(sum(q16.values()), 4),
-                    "queries": q16,
-                    "fresh_value": round(sum(f16.values()), 4),
-                    "fresh_queries": f16,
-                    "fresh_noop_value": round(sum(fn16.values()), 4),
-                    "fresh_noop_queries": fn16,
-                    "skipped": sorted(TIER16_SKIP),
-                    "duckdb_value": round(sum(d16.values()), 4),
-                    "duckdb_queries": d16,
-                }
-            except Exception as e:  # additive tier: never sink headline
-                out["tier16x_error"] = str(e).splitlines()[0][:200]
-    # 100× tier (VERDICT r9 item 3): the linear-path headline queries
-    # on a 100-copies replica (~sf10: 600M lineitem rows, 1.2M events/
-    # hour-bucket span), DuckDB twins re-measured there. At this tier
-    # the single-threaded-ingest portions of DuckDB's plans dominate
-    # (topk_window's twin was already 1.9 s at 16×) — the twin stops
-    # being a meaningful single-node baseline and becomes a
-    # documentation row: the ratio quantifies exactly when the
-    # distributed plan's constant factors amortize. knn excluded as at
-    # 16× (quadratic anchor).
-    if os.environ.get("NIPD_BENCH_TIER100", "1") != "0":
-        t100 = _ensure_scale(100, TIER100_DIR, 1200)
-        if t100 is not None:
-            try:
-                q100, _ = _bench_specs(
-                    spark, specs, t100, n_runs=3, skip=TIER16_SKIP
-                )
-                f100 = _bench_specs_fresh(
-                    spark, specs, t100, n_runs=2, skip=TIER16_SKIP
-                )
-                fn100 = _bench_specs_fresh_noop(
-                    spark, specs, t100, n_runs=2, skip=TIER16_SKIP
-                )
-                d100 = _bench_duck(specs, t100, n_runs=2, skip=TIER16_SKIP)
-                out["tier100x"] = {
-                    "sf_dir": t100,
-                    "copies_of_sf0.1": 100,
-                    "value": round(sum(q100.values()), 4),
-                    "queries": q100,
-                    "fresh_value": round(sum(f100.values()), 4),
-                    "fresh_queries": f100,
-                    "fresh_noop_value": round(sum(fn100.values()), 4),
-                    "fresh_noop_queries": fn100,
-                    "skipped": sorted(TIER16_SKIP),
-                    "duckdb_value": round(sum(d100.values()), 4),
-                    "duckdb_queries": d100,
-                    "note": (
-                        "DuckDB twin re-measured at 100x for scaling "
-                        "documentation; single-node warm-best stops "
-                        "being a like-for-like baseline at this tier"
-                    ),
-                }
-            except Exception as e:  # additive tier: never sink headline
-                out["tier100x_error"] = str(e).splitlines()[0][:200]
+    for key, copies, out_dir, env, timeout, n_warm, n_duck, note in TIERS:
+        if os.environ.get(env, "1") == "0":
+            continue
+        tier_dir = _ensure_scale(copies, out_dir, timeout)
+        if tier_dir is None:
+            continue
+        try:
+            out[key] = _bench_tier(spark, specs, tier_dir, copies, n_warm, n_duck, note)
+        except Exception as e:  # additive tier: never sink headline
+            out[f"{key}_error"] = str(e).splitlines()[0][:200]
     print(json.dumps(out))
 
 

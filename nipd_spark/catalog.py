@@ -8,7 +8,11 @@ pushdown/pruning applies the same way at any scale.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
+
+from nipd_spark.session import profile
 
 TABLES = (
     "region",
@@ -67,12 +71,17 @@ _CACHE: dict[tuple[int, str, str], DataFrame] = {}
 # ---------------------------------------------------------------------------
 _AUTOSIZE_MIN_BYTES = 64 * 1024 * 1024
 _SIZE_CACHE: dict[str, int] = {}  # sf_dir -> total table bytes
-_AUTOSIZE_APPLIED: dict[int, tuple[str, str] | None] = {}  # session -> last
+# the conf keys autosize writes
+AUTOSIZE_KEYS = (
+    "spark.sql.files.maxPartitionBytes", "spark.sql.shuffle.partitions",
+    "spark.sql.files.openCostInBytes", "spark.sql.files.minPartitionNum",
+)
+# session -> (last applied (maxPartitionBytes, shuffle.partitions),
+#             the session's own AUTOSIZE_KEYS values before the first write)
+_AUTOSIZE_APPLIED: dict[int, tuple[tuple[str, str], dict]] = {}
 
 
 def _dir_bytes(sf_dir: str) -> int:
-    import os
-
     total = _SIZE_CACHE.get(sf_dir)
     if total is None:
         total = 0
@@ -94,51 +103,44 @@ def autosize(spark: SparkSession, sf_dir: str) -> None:
     SINGLE-TIER-PER-ACTION-WINDOW ASSUMPTION (r12 ADVICE, documented
     loudly): autosize mutates SESSION-GLOBAL conf at DataFrame-BUILD
     time, but Spark reads both keys at ACTION time. Build a big-tier
-    plan, then load a sub-floor dir (which restores the local
-    defaults), then execute the big-tier plan — and it silently runs
+    plan, then load a sub-floor dir (which restores the session's own
+    values), then execute the big-tier plan — and it silently runs
     at 8 partitions, the exact pathology autosize exists to fix.
     Every bench/probe loop in this repo is tier-sequential (all
     actions on a tier complete before another tier is loaded); keep it
     that way, or re-invoke autosize(spark, sf_dir) immediately before
-    the action. The restore constants below are session.py's LOCAL
-    profile defaults (shuffle.partitions=8) and Spark's own
-    maxPartitionBytes default (128 MB) — update them together with
-    session.py if those ever change (covered by
+    the action. The restore puts back the session's own values of
+    AUTOSIZE_KEYS, saved before the first big-tier write (covered by
     tests/test_operators_properties.py::test_autosize_restores_...).
     """
-    import os
-
     if os.environ.get("NIPD_SPARK_AUTOSIZE", "1") == "0":
         return
     if os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS"):
         return
-    if os.environ.get("SPARK_GRAFT_PROFILE", "local") == "scale":
+    if profile() == "scale":
         return  # AQE coalesces from the ceiling by advisory size
     total = _dir_bytes(sf_dir)
     sid = id(spark)
-    prev = _AUTOSIZE_APPLIED.get(sid)
+    prev, saved = _AUTOSIZE_APPLIED.get(sid, (None, None))
     if total < _AUTOSIZE_MIN_BYTES:
         # Below the floor: leave whatever the session (or a test /
         # streaming harness) has configured UNTOUCHED — only restore the
-        # shipped local defaults if an earlier big-tier load changed them.
-        if prev is not None:
-            spark.conf.set("spark.sql.files.maxPartitionBytes", "134217728")
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
-            spark.conf.set("spark.sql.files.openCostInBytes", "4194304")
-            try:
-                spark.conf.unset("spark.sql.files.minPartitionNum")
-            except Exception:
-                pass  # never set in this session
-            _AUTOSIZE_APPLIED[sid] = None
+        # session's own values if an earlier big-tier load changed them.
+        for key, value in (saved or {}).items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
+        _AUTOSIZE_APPLIED.pop(sid, None)
         return
     mpb = min(max(total // 128, 8 * 1024 * 1024), 128 * 1024 * 1024)
     sp = min(max(total // (16 * 1024 * 1024), 8), 1024)
     want = (str(mpb), str(sp))
     if prev == want:
         return
-    spark.conf.set("spark.sql.files.maxPartitionBytes", want[0])
-    spark.conf.set("spark.sql.shuffle.partitions", want[1])
-    # Per-SCAN split floor (r13; guide §6 "minPartitionNum sets a floor
+    saved = saved or {key: spark.conf.get(key, None) for key in AUTOSIZE_KEYS}
+    # The split size and reduce count above, plus a per-SCAN split
+    # floor (r13; guide §6 "minPartitionNum sets a floor
     # on scan parallelism"): ONE global maxPartitionBytes cannot serve a
     # mixed-size table set — total/128 = 12.6 MB at the 100x replica
     # split the 1.1 GB lineitem 90 ways but the 58 MB documents table
@@ -152,9 +154,9 @@ def autosize(spark: SparkSession, sf_dir: str) -> None:
     # 4 MB; 1 MB matches these one-file-per-table fixtures (measured
     # paired at 100x, both orderings: l6 1.4x, a17 1.2x, l20/a32 1.1x,
     # q3/w22/o4/l50/l62/l67 neutral).
-    spark.conf.set("spark.sql.files.openCostInBytes", "1048576")
-    spark.conf.set("spark.sql.files.minPartitionNum", want[1])
-    _AUTOSIZE_APPLIED[sid] = want
+    for key, value in zip(AUTOSIZE_KEYS, (*want, "1048576", want[1])):
+        spark.conf.set(key, value)
+    _AUTOSIZE_APPLIED[sid] = (want, saved)
 
 
 def is_big_tier(sf_dir: str) -> bool:
@@ -182,7 +184,6 @@ def dataset_tag(sf_dir: str, salt: str = "") -> str:
     auto-invalidates every derived artifact. ~10 stat calls, no reads.
     """
     import hashlib
-    import os
 
     parts = [sf_dir, salt]
     for name in TABLES:

@@ -23,8 +23,6 @@ node ids: shuffle-partitionable, AQE-splittable, no cross product.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -32,6 +30,7 @@ from nipd_spark.catalog import load
 from nipd_spark.operators.materialize import spill_checkpoint
 from nipd_spark.oracle import dround
 from nipd_spark.registry import query
+from nipd_spark.session import profile
 
 
 def _basket_pairs(spark: SparkSession, sf_dir: str, symmetric: bool) -> DataFrame:
@@ -187,7 +186,7 @@ def g1_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # profile only: at cluster scale SMJ's graceful sort-spill is the
     # safe default and AQE's maxShuffledHashJoinLocalMapThreshold makes
     # the same rewrite when per-partition sizes allow.
-    if os.environ.get("SPARK_GRAFT_PROFILE", "local") != "scale":
+    if profile() != "scale":
         o2 = o2.hint("shuffle_hash")
         o3 = o3.hint("shuffle_hash")
     tri = (

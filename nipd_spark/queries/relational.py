@@ -13,14 +13,13 @@ keys and AQE handles skew/coalescing.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nipd_spark.catalog import is_big_tier, load
 from nipd_spark.oracle import dround
 from nipd_spark.registry import query
+from nipd_spark.session import profile
 
 # --------------------------------------------------------------------------
 # Flagship: TPC-H-Q1-style pricing summary (S1 + P2 + A1 + O1)
@@ -659,7 +658,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         # tests/test_plan_quality.py proves both branches
         # oracle-equivalent at sf0.01.
         ok = o.select("o_orderkey")
-        if os.environ.get("SPARK_GRAFT_PROFILE", "local") != "scale":
+        if profile() != "scale":
             ok = F.broadcast(ok)
             li = li.join(ok, li.l_orderkey == F.col("o_orderkey"), "left_semi")
         liagg = li.groupBy("l_orderkey").agg(rev)
@@ -673,7 +672,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .limit(10)
         )
-    if os.environ.get("SPARK_GRAFT_PROFILE", "local") != "scale":
+    if profile() != "scale":
         o = F.broadcast(o)
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
@@ -792,7 +791,7 @@ def q5_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     oc = orders.join(cust, orders.o_custkey == cust.c_custkey).select(
         "o_orderkey", "c_nationkey"
     )
-    if os.environ.get("SPARK_GRAFT_PROFILE", "local") != "scale":
+    if profile() != "scale":
         oc = F.broadcast(oc)
     return (
         lineitem.join(oc, lineitem.l_orderkey == F.col("o_orderkey"))

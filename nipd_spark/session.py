@@ -26,6 +26,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def profile() -> str:
+    """The active profile, 'local' (default) or 'scale' (see get_spark).
+
+    Read from the env on every call, not once at session start: query
+    builders branch on it per build, and tests switch it in-session."""
+    return os.environ.get("SPARK_GRAFT_PROFILE", "local")
+
+
 def get_spark(
     app_name: str = "nipd_spark",
     cpus: int | None = None,
@@ -51,8 +59,8 @@ def get_spark(
     # (its per-stage re-planning adds ~0.1 s fixed latency per query with
     # nothing to adapt at MB scale); 'scale' = cluster/100 TB posture —
     # AQE ON for runtime coalescing, skew splitting, and plan switching.
-    profile = os.environ.get("SPARK_GRAFT_PROFILE", "local")
-    aqe = "true" if profile == "scale" else "false"
+    prof = profile()
+    aqe = "true" if prof == "scale" else "false"
     builder = SparkSession.builder
     if master:  # empty string = defer to spark-submit's --master
         builder = builder.master(master)
@@ -62,7 +70,7 @@ def get_spark(
         .config(
             "spark.sql.shuffle.partitions",
             os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "8")
-            if profile == "local"
+            if prof == "local"
             else "2000",
         )  # scale: high ceiling, AQE coalesces down by advisory size
         .config(
@@ -72,7 +80,7 @@ def get_spark(
             # 'scale', keep the default floor (= cluster parallelism) so
             # medium files still fan out across executors.
             "spark.sql.files.minPartitionNum",
-            "1" if profile == "local" else str(cpus),
+            "1" if prof == "local" else str(cpus),
         )
         .config("spark.sql.adaptive.enabled", aqe)
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

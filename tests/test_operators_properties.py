@@ -783,14 +783,23 @@ def test_connected_components_invariants(spark, sf_dir):
         assert c <= node
 
 
-def test_autosize_restores_local_defaults_on_small_tier(spark, monkeypatch):
+def test_autosize_restores_local_defaults_on_small_tier(
+    spark, monkeypatch, tmp_path
+):
     """Big-tier autosize must be UNDONE when a sub-floor dir is loaded
-    next (r12 ADVICE): the restore path re-applies the shipped local
-    defaults, so a later small-tier action does not run with big-tier
-    splits — and, conversely, interleaved big-tier plans executed after
-    a small load would silently run at 8 partitions (autosize is
-    applied at load time but READ at action time; harnesses must stay
-    tier-sequential within an action window)."""
+    next (r12 ADVICE): the restore path puts back the session's OWN
+    values of the autosize keys, saved before the first big-tier write,
+    so a later small-tier action plans exactly as before — the local
+    profile's minPartitionNum=1 included, or an 8 MB scan would split
+    by core count instead of once. Conversely, interleaved big-tier
+    plans executed after a small load would silently run at the
+    session's partition count (autosize is applied at load time but
+    READ at action time; harnesses must stay tier-sequential within an
+    action window)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     from nipd_spark import catalog
 
     monkeypatch.delenv("NIPD_SPARK_AUTOSIZE", raising=False)
@@ -801,6 +810,20 @@ def test_autosize_restores_local_defaults_on_small_tier(spark, monkeypatch):
         catalog, "_dir_bytes",
         lambda d: 2 * 1024**3 if d == big else 1024,
     )
+    # 8 MB uncompressed: above the 4 MB openCostInBytes default, so its
+    # split count shows whether minPartitionNum came back
+    scan = str(tmp_path / "scan.parquet")
+    pq.write_table(
+        pa.table({"x": np.arange(1_000_000, dtype=np.int64)}),
+        scan, compression="none", use_dictionary=False,
+    )
+
+    def splits() -> int:
+        return spark.read.parquet(scan).rdd.getNumPartitions()
+
+    original = {k: spark.conf.get(k, None) for k in catalog.AUTOSIZE_KEYS}
+    assert original["spark.sql.files.minPartitionNum"] == "1"  # local profile
+    assert splits() == 1
     catalog.autosize(spark, big)
     assert spark.conf.get("spark.sql.shuffle.partitions") == "128"
     assert spark.conf.get("spark.sql.files.maxPartitionBytes") == str(
@@ -810,14 +833,10 @@ def test_autosize_restores_local_defaults_on_small_tier(spark, monkeypatch):
     assert spark.conf.get("spark.sql.files.minPartitionNum") == "128"
     assert spark.conf.get("spark.sql.files.openCostInBytes") == "1048576"
     catalog.autosize(spark, small)
-    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
-    assert (
-        spark.conf.get("spark.sql.files.maxPartitionBytes") == "134217728"
-    )
-    assert spark.conf.get("spark.sql.files.openCostInBytes") == "4194304"
-    assert (
-        spark.conf.get("spark.sql.files.minPartitionNum", None) is None
-    )
+    assert {
+        k: spark.conf.get(k, None) for k in catalog.AUTOSIZE_KEYS
+    } == original
+    assert splits() == 1
 
 
 def test_connected_components_adjacency_matches_pairs(spark, sf_dir):

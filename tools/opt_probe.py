@@ -22,9 +22,8 @@ from __future__ import annotations
 import os
 import statistics
 import sys
-import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
@@ -43,16 +42,13 @@ def main() -> None:
     # SPARK_GRAFT_SHUFFLE_PARTITIONS env var — disable it whenever the
     # experiment touches the managed keys, or the probe would REPORT a
     # conf it did not run with (r12 ADVICE item)
-    _AUTOSIZE_KEYS = {
-        "spark.sql.shuffle.partitions",
-        "spark.sql.files.maxPartitionBytes",
-        "spark.sql.files.minPartitionNum",
-        "spark.sql.files.openCostInBytes",
-    }
-    if _AUTOSIZE_KEYS & overrides.keys():
+    from nipd_spark.catalog import AUTOSIZE_KEYS
+
+    if overrides.keys() & set(AUTOSIZE_KEYS):
         os.environ.setdefault("NIPD_SPARK_AUTOSIZE", "0")
 
     from nipd_spark import registry
+    from nipd_spark.profile import collect, noop, time_runs
     from nipd_spark.session import get_spark
 
     spark = get_spark("opt-probe")
@@ -60,22 +56,10 @@ def main() -> None:
         spark.conf.set(k, v)  # runtime confs only; static confs raise here
     spec = registry.all_specs()[name]
 
-    def run_once() -> float:
-        df = spec.fn(spark, sf_dir)  # fresh lineage
-        t0 = time.time()
-        if use_pandas:
-            df.toPandas()
-        else:
-            df.write.format("noop").mode("overwrite").save()
-        return time.time() - t0
-
-    spark.sparkContext.setJobDescription(f"opt-probe warmup {name}")
-    run_once()  # warm-up: parquet footers, JIT, broadcast caches
-    times = []
-    for i in range(n_runs):
-        spark.sparkContext.setJobDescription(f"opt-probe {name} run{i}")
-        dt = run_once()
-        times.append(dt)
+    sink = collect if use_pandas else noop
+    spark.sparkContext.setJobDescription(f"opt-probe {name}")
+    times = time_runs(lambda: spec.fn(spark, sf_dir), sink, n_runs).times
+    for i, dt in enumerate(times):
         print(f"run{i}: {dt:.3f}s", flush=True)
     print(
         f"{name} @ {sf_dir}: min {min(times):.3f}s  "

@@ -10,12 +10,13 @@ Usage: SPARK_GRAFT_PROFILE=scale python tools/scale_probe.py [scaled_dir]
 from __future__ import annotations
 
 import json
+import os
 import sys
-import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from nipd_spark import registry
+from nipd_spark.profile import collect, time_runs
 from nipd_spark.session import get_spark
 
 PROBE = [
@@ -179,8 +180,9 @@ PROBE = [
 
 
 def timed(fn, spark, sf_dir: str, warm: int = 2) -> tuple[float, int]:
-    """Best-warm BUILD + FULL-materialization time (Arrow toPandas,
-    like bench.py and any real consumer).
+    """Best BUILD + FULL-materialization time over ``warm`` fresh runs
+    after one warm-up, and the row count (Arrow toPandas, like bench.py
+    and any real consumer).
 
     ``df.count()`` lets Catalyst prune unreferenced projections — for a
     map-only query that silently times a bare scan (this bit us: an
@@ -198,41 +200,43 @@ def timed(fn, spark, sf_dir: str, warm: int = 2) -> tuple[float, int]:
     certificate landed; the g2 edge-build had to be hand-reported in
     r6 for the same reason). Plan construction for action-free queries
     is ~ms and does not disturb ratios.
+
+    Each run rebuilds the DataFrame: re-executing the SAME object skips
+    completed shuffle map stages (Spark stage reuse), which would time
+    only the final stage for shuffle-heavy queries. A fresh plan re-runs
+    every stage — comparable to DuckDB's warm re-execution.
     """
-    fn(spark, sf_dir).toPandas()  # warm-up: footers, code cache, JIT
-    n = 0
-    runs = []
-    for _ in range(warm):
-        # Rebuild the DataFrame each run: re-executing the SAME object
-        # skips completed shuffle map stages (Spark stage reuse), which
-        # would time only the final stage for shuffle-heavy queries. A
-        # fresh plan re-runs every stage — comparable to DuckDB's warm
-        # re-execution.
-        t0 = time.time()
-        df = fn(spark, sf_dir)
-        n = len(df.toPandas())
-        runs.append(time.time() - t0)
-    return min(runs), n
+    r = time_runs(
+        lambda: fn(spark, sf_dir), lambda df: len(collect(df)), warm, include_build=True
+    )
+    return min(r.times), r.last
 
 
-def main() -> None:
-    scaled = sys.argv[1] if len(sys.argv) > 1 else "/tmp/nipd_scale16"
+def probe(names, scaled: str, tag: str, warm: int = 2) -> dict:
+    """Time each query at sf0.1 and at ``scaled``; one JSON line per
+    query as it finishes. Returns {name: row}, keyed ``tag`` for the
+    scaled time."""
     spark = get_spark("scale-probe")
     specs = registry.all_specs()
     out = {}
-    for name in PROBE:
+    for name in names:
         fn = specs[name].fn
-        t_small, n_small = timed(fn, spark, "/root/testdata/sf0.1")
-        t_big, n_big = timed(fn, spark, scaled)
+        t_small, n_small = timed(fn, spark, "/root/testdata/sf0.1", warm)
+        t_big, n_big = timed(fn, spark, scaled, warm)
         ratio = t_big / t_small if t_small > 0 else float("nan")
         out[name] = {
             "sf0.1_s": round(t_small, 3),
-            "x16_s": round(t_big, 3),
+            tag: round(t_big, 3),
             "time_ratio": round(ratio, 1),
             "rows_out": [n_small, n_big],
         }
         print(json.dumps({name: out[name]}), flush=True)
-    print(json.dumps({"probe": out}))
+    return out
+
+
+def main() -> None:
+    scaled = sys.argv[1] if len(sys.argv) > 1 else "/tmp/nipd_scale16"
+    print(json.dumps({"probe": probe(PROBE, scaled, "x16_s")}))
 
 
 if __name__ == "__main__":

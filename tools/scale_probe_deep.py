@@ -25,11 +25,7 @@ from __future__ import annotations
 import json
 import sys
 
-sys.path.insert(0, "/root/repo")
-
-from nipd_spark import registry
-from nipd_spark.session import get_spark
-from scale_probe import timed
+from scale_probe import probe
 
 PROBE_DEEP = [
     "q1_pricing_summary",  # scan -> partial/final hash agg
@@ -81,25 +77,10 @@ PROBE_DEEP = [
 
 def main() -> None:
     scaled = sys.argv[1] if len(sys.argv) > 1 else "/tmp/nipd_scale100"
-    spark = get_spark("scale-probe-deep")
-    specs = registry.all_specs()
-    out = {}
-    for name in PROBE_DEEP:
-        fn = specs[name].fn
-        # warm=1 at this tier: one warm-up + one timed run — the 100x
-        # runs are tens of seconds, so run-to-run variance is a small
-        # fraction and a third execution buys little.
-        t_small, n_small = timed(fn, spark, "/root/testdata/sf0.1", warm=1)
-        t_big, n_big = timed(fn, spark, scaled, warm=1)
-        ratio = t_big / t_small if t_small > 0 else float("nan")
-        out[name] = {
-            "sf0.1_s": round(t_small, 3),
-            "x100_s": round(t_big, 3),
-            "time_ratio": round(ratio, 1),
-            "rows_out": [n_small, n_big],
-        }
-        print(json.dumps({name: out[name]}), flush=True)
-    print(json.dumps({"probe_deep": out}))
+    # warm=1 at this tier: one warm-up + one timed run — the 100x runs
+    # are tens of seconds, so run-to-run variance is a small fraction
+    # and a third execution buys little.
+    print(json.dumps({"probe_deep": probe(PROBE_DEEP, scaled, "x100_s", warm=1)}))
 
 
 if __name__ == "__main__":
