@@ -24,7 +24,12 @@ metric's methodology:
     sink: every column of every row is computed and discarded, so
     Arrow collection of the result set is excluded (o4's 100× fresh
     number proved to be ~70% driver-side collection of its 4.5M-row
-    result);
+    result). It is NOT a lower bound of "fresh_queries": the noop write
+    job adds a fixed setup-and-commit cost that a collect does not pay,
+    so for small-result queries it reads higher (at 16×, events_hourly
+    0.27-0.40 s noop vs 0.23-0.29 s collect, token_tf 0.38-0.68 s vs
+    0.34-0.48 s). It isolates compute only where the collect it drops
+    outweighs that fixed cost;
   - "duckdb_queries"/"duckdb_value" — the DuckDB twins on the same
     parquet dir (scale tiers only): N executes, the first untimed; the
     min of the rest;

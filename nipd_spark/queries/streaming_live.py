@@ -1511,7 +1511,8 @@ def t20_state_store_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-user aggregate exactly (the oracle): state is the aggregate.
 
     Scale: the reader maps checkpoint state files directly (one task
-    per state partition, here the pinned 32) with no replay — at
+    per state partition, here the pinned task-slot count, or the count
+    an existing checkpoint was started with) with no replay — at
     100 TB this is how you audit a TB-sized RocksDB state without
     touching the source stream (measured, not just claimed: the r8
     RocksDB twin in tests/test_streaming.py runs this tracker + state

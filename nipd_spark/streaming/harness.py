@@ -25,34 +25,43 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# Streaming state-store partition count. This is a DELIBERATE, profile-
-# independent choice: the count is captured at a stateful query's first
-# micro-batch (and persisted in its checkpoint), so inheriting whatever
-# batch-oriented spark.sql.shuffle.partitions happens to be set (2000
-# under SPARK_GRAFT_PROFILE=scale) silently builds 2000 state stores and
-# 2000 tasks per micro-batch — measured 49 s vs 3 s for t4 at sf0.001.
-# Real deployments size this to keyed-state volume, not scan width.
-STATE_PARTITIONS = 32
+def state_partitions(spark: SparkSession) -> int:
+    """Streaming state-store partition count: the session's task slots,
+    ``spark.sparkContext.defaultParallelism`` (4 on a 4-core
+    ``local[4]``, 32 on 32 cores).
+
+    The count is captured at a stateful query's first micro-batch (and
+    persisted in its checkpoint, so a restart keeps its own count).
+    Inheriting the batch-oriented spark.sql.shuffle.partitions (2000
+    under SPARK_GRAFT_PROFILE=scale) would silently build 2000 state
+    stores and 2000 tasks per micro-batch — measured 49 s vs 3 s for t4
+    at sf0.001. Batch shuffle width sizes scans, not keyed state, and
+    the keyed-state volume is unknown at the first batch, when the count
+    is fixed. Slots give one wave of state tasks per micro-batch; each
+    store beyond them adds a wave and its own per-batch commit (about
+    80-100 ms each on 4 cores: a fixed 32 gave t21 128 store commits and
+    9.9 s of commit time a pass, for 7,267 state rows)."""
+    return spark.sparkContext.defaultParallelism
 
 
 @contextmanager
-def pinned_state_partitions(spark: SparkSession, n: int = STATE_PARTITIONS):
-    """Temporarily pin spark.sql.shuffle.partitions while a streaming
-    query starts and drains, so state partitioning never inherits the
-    batch profile's shuffle width (see STATE_PARTITIONS note).
+def pinned_state_partitions(spark: SparkSession):
+    """Temporarily pin spark.sql.shuffle.partitions to
+    ``state_partitions`` while a streaming query starts and drains, so
+    state partitioning never inherits the batch profile's shuffle width.
 
     FALLBACK PATH ONLY: this mutates the given session's conf, so a
     query planned concurrently on the SAME session mid-pin would
     capture the pinned value. The harness's primary mechanism is
     ``pinned_session`` — streams built by ``events_stream`` live on a
     dedicated child SparkSession whose shuffle width is permanently
-    STATE_PARTITIONS, so the caller's session conf is never touched and
-    concurrent batch planning on it is unaffected
+    ``state_partitions``, so the caller's session conf is never touched
+    and concurrent batch planning on it is unaffected
     (tests/test_streaming.py::test_pin_does_not_leak_to_parent). This
     context manager remains for streams built directly on a caller's
     session (t13's restart harness)."""
     saved = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions(spark)))
     try:
         yield
     finally:
@@ -64,7 +73,8 @@ _PIN_ATTR = "_nipd_pinned_child"
 
 def pinned_session(spark: SparkSession) -> SparkSession:
     """A child SparkSession (same SparkContext, own SQLConf) with
-    spark.sql.shuffle.partitions permanently = STATE_PARTITIONS.
+    spark.sql.shuffle.partitions permanently = ``state_partitions``
+    (the task-slot count).
 
     A streaming query captures its conf from ITS DataFrame's session at
     start, so building the stream here scopes the state-partition pin
@@ -82,7 +92,7 @@ def pinned_session(spark: SparkSession) -> SparkSession:
     if cached is not None:
         return cached
     child = spark.newSession()
-    child.conf.set("spark.sql.shuffle.partitions", str(STATE_PARTITIONS))
+    child.conf.set("spark.sql.shuffle.partitions", str(state_partitions(spark)))
     setattr(child, _PIN_ATTR, True)
     spark._nipd_pin_child_ref = child  # noqa: SLF001
     return child

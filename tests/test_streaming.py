@@ -143,8 +143,9 @@ def test_pin_scoped_per_query_not_session(spark, sf_dir):
         stream = harness.events_stream(spark, sf_dir)
         child = stream.sparkSession
         assert child is not spark
+        # the rule's value (the task slots), not the parent's 13
         assert child.conf.get("spark.sql.shuffle.partitions") == str(
-            harness.STATE_PARTITIONS
+            spark.sparkContext.defaultParallelism
         )
         agg = stream.groupBy("event_type").agg(F.count("*").alias("n"))
         q = harness.start_pinned(
@@ -153,7 +154,8 @@ def test_pin_scoped_per_query_not_session(spark, sf_dir):
             .queryName("pin_probe")
         )
         try:
-            # planned MID-PIN on the parent: must capture 13, not 32
+            # planned MID-PIN on the parent: must capture 13, not the
+            # child's state-partition count
             batch = (
                 spark.range(0, 1000)
                 .groupBy((F.col("id") % 7).alias("k"))
@@ -168,6 +170,51 @@ def test_pin_scoped_per_query_not_session(spark, sf_dir):
         assert child.table("pin_probe").count() > 0
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", saved)
+
+
+def test_results_invariant_to_state_partition_count(spark, sf_dir, monkeypatch):
+    """The state-partition count follows the core count (the task slots),
+    so a stateful stream's result must not depend on it: the same
+    queries with the pinned child forced to 1 and to 32 state partitions
+    hash identically (column-name-sorted canonical rows, as the driver
+    hashes). Each run gets a fresh child, since the count is read when
+    the child is made."""
+    import hashlib
+
+    from nipd_spark.queries.streaming_live import (
+        t4_stream_tumbling_watermark,
+        t7b_stream_stream_join,
+        t8_stateful_user_tracker,
+        t21_chained_windows,
+    )
+    from nipd_spark.streaming import harness
+    from nipd_spark.testing import canon_rows
+
+    fns = (
+        t21_chained_windows,
+        t4_stream_tumbling_watermark,
+        t7b_stream_stream_join,
+        t8_stateful_user_tracker,
+    )
+    cached = getattr(spark, "_nipd_pin_child_ref", None)
+
+    def hashes(n):
+        monkeypatch.setattr(harness, "state_partitions", lambda _s: n)
+        spark._nipd_pin_child_ref = None  # noqa: SLF001
+        out = {}
+        for fn in fns:
+            df = fn(spark, sf_dir)
+            rows = canon_rows(df.columns, [tuple(r) for r in df.collect()])
+            assert rows, fn.__name__
+            out[fn.__name__] = hashlib.sha256("\n".join(rows).encode()).hexdigest()
+        child = harness.pinned_session(spark)
+        assert child.conf.get("spark.sql.shuffle.partitions") == str(n)
+        return out
+
+    try:
+        assert hashes(1) == hashes(32)
+    finally:
+        spark._nipd_pin_child_ref = cached  # noqa: SLF001
 
 
 def test_transform_with_state_tracker(spark, sf_dir):
