@@ -36,6 +36,10 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
     from nipd_spark.queries.relational import q1_pricing_summary
 
+    # a session not built by session.get_spark gets the same reading of
+    # parquet timestamps (TimestampType, never inferred NTZ), whichever
+    # table its first query loads
+    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     return q1_pricing_summary(spark, "/root/testdata/sf0.001")
 
 

@@ -214,9 +214,10 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Columnar parquet scan (SURVEY.md §2 S1): pushdown + pruning apply.
 
     ``events.ts`` is schema-adaptive: when the parquet stores µs
-    timestamps (current fixtures, isAdjustedToUTC=false) we disable NTZ
-    inference so the scan yields TimestampType directly — the session tz
-    is UTC, so values are bit-identical to the NTZ reading and predicate
+    timestamps (current fixtures, isAdjustedToUTC=false) the scan yields
+    TimestampType directly, because session.get_spark turns NTZ
+    inference off for every table and session — the session tz is UTC,
+    so values are bit-identical to the NTZ reading and predicate
     pushdown on ts is preserved (no post-scan cast). When it stores ns
     (round-1 vintage; Spark 4.1 rejects it as PARQUET_TYPE_ILLEGAL) we
     read nanos as long via the legacy conf and floor-truncate to µs
@@ -237,8 +238,6 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     else:
-        if name == "events":
-            spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     _CACHE[key] = df
     return df

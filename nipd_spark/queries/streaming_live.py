@@ -17,6 +17,7 @@ from nipd_spark.registry import query
 from nipd_spark.streaming.harness import (
     events_stream,
     run_to_completion,
+    scratch_dir,
     start_pinned,
 )
 
@@ -419,8 +420,7 @@ def t9_stream_parquet_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    tag = dataset_tag(sf_dir, "t9")
-    out = f"/tmp/nipd_sink_{tag}"
+    out = scratch_dir(sf_dir, "t9")
     chk = out + "_chk"
     if not os.path.exists(out + "/.done"):
         shutil.rmtree(out, ignore_errors=True)
@@ -483,8 +483,7 @@ def t10_stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFram
 
     from nipd_spark.operators.merge import merge_into
 
-    tag = dataset_tag(sf_dir, "t10v2")
-    store = f"/tmp/nipd_upsert_{tag}"
+    store = scratch_dir(sf_dir, "t10v2")
     chk = store + "_chk"
     done = store + "/.done"
     if not os.path.exists(done):
@@ -680,10 +679,10 @@ def t12_incremental_availablenow(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nipd_spark.streaming.harness import _stage_dir
 
     staged = _stage_dir(sf_dir, parts=4)  # 4 chunk files of events
-    tag = dataset_tag(sf_dir, "t12")
-    src = f"/tmp/nipd_t12_src_{tag}"
-    out = f"/tmp/nipd_t12_out_{tag}"
-    chk = f"/tmp/nipd_t12_chk_{tag}"
+    base = scratch_dir(sf_dir, "t12")
+    src = f"{base}_src"
+    out = f"{base}_out"
+    chk = f"{base}_chk"
 
     def run_once() -> None:
         stream = (
@@ -759,10 +758,10 @@ def t13_stateful_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nipd_spark.streaming.harness import _stage_dir
 
     staged = _stage_dir(sf_dir, parts=4)
-    tag = dataset_tag(sf_dir, "t13")
-    src = f"/tmp/nipd_t13_src_{tag}"
-    chk = f"/tmp/nipd_t13_chk_{tag}"
-    name = f"t13_sink_{tag}"
+    base = scratch_dir(sf_dir, "t13")
+    src = f"{base}_src"
+    chk = f"{base}_chk"
+    name = f"t13_sink_{dataset_tag(sf_dir, 't13')}"
 
     def run_once() -> None:
         agg = (
@@ -906,10 +905,10 @@ def t15_stream_multi_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from nipd_spark.streaming.harness import events_stream
 
-    tag = dataset_tag(sf_dir, "t15")
-    a_dir = f"/tmp/nipd_t15_a_{tag}"
-    b_dir = f"/tmp/nipd_t15_b_{tag}"
-    chk = f"/tmp/nipd_t15_chk_{tag}"
+    base = scratch_dir(sf_dir, "t15")
+    a_dir = f"{base}_a"
+    b_dir = f"{base}_b"
+    chk = f"{base}_chk"
     if not os.path.exists(a_dir + "/_done"):
         for d in (a_dir, b_dir, chk):
             shutil.rmtree(d, ignore_errors=True)
@@ -976,9 +975,9 @@ def t16_update_mode_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from nipd_spark.streaming.harness import events_stream
 
-    tag = dataset_tag(sf_dir, "t16")
-    log_dir = f"/tmp/nipd_t16_log_{tag}"
-    chk = f"/tmp/nipd_t16_chk_{tag}"
+    base = scratch_dir(sf_dir, "t16")
+    log_dir = f"{base}_log"
+    chk = f"{base}_chk"
     if not os.path.exists(log_dir + "/_done"):
         for d in (log_dir, chk):
             shutil.rmtree(d, ignore_errors=True)
@@ -1107,8 +1106,7 @@ def t18_stream_snapshot_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_snapshot,
     )
 
-    tag = dataset_tag(sf_dir, "t18")
-    table = f"/tmp/nipd_snapver_{tag}"
+    table = scratch_dir(sf_dir, "t18")
     chk = table + "_chk"
     if (latest_version(table) or 0) != 4:  # self-heal any partial state
         shutil.rmtree(table, ignore_errors=True)
@@ -1318,170 +1316,6 @@ def t19_stateful_session_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_LOCK_STALE_SEC = 300.0  # t20 holders finish in seconds; 5 min = dead
-
-
-def _chk_lock_try_acquire(lock: str) -> bool:
-    """Atomic-mkdir lock with a pid stamp so later waiters can detect
-    a crashed holder (see _chk_lock_holder_stale). Returns True iff
-    THIS process now owns the lock; the caller must release via
-    _chk_lock_release in a try/finally entered immediately after."""
-    import os
-
-    try:
-        os.mkdir(lock)
-    except FileExistsError:
-        return False
-    try:
-        with open(os.path.join(lock, "pid"), "w") as fh:
-            fh.write(str(os.getpid()))
-    except OSError:
-        pass  # stamp is advisory; mtime staleness still covers us
-    return True
-
-
-def _lock_holder_pid(lock: str):
-    """The lock's stamped holder pid, or None (unstamped/unreadable)."""
-    import os
-
-    try:
-        with open(os.path.join(lock, "pid")) as fh:
-            return int(fh.read().strip())
-    except (OSError, ValueError):
-        return None
-
-
-def _pid_is_lock_holder(pid: int, lock_mtime: float) -> bool:
-    """True when ``pid`` is alive AND plausibly the process that created
-    the lock: a live pid whose /proc entry appeared AFTER the lock was
-    stamped is a RECYCLED pid (the real holder died; some unrelated
-    process now wears its number) and must not shield the lock from
-    age-based reclaim — the pre-r8 failure mode where a recycled-to-
-    alive pid made a crashed holder's lock permanently unreclaimable."""
-    import os
-
-    try:
-        os.kill(pid, 0)
-    except ProcessLookupError:
-        return False
-    except PermissionError:
-        return True  # alive, another user — cannot stat /proc; trust it
-    try:
-        # /proc/<pid> ctime ≈ process start (Linux); 2 s slack for the
-        # gap between process start and its mkdir+stamp
-        return os.stat(f"/proc/{pid}").st_ctime <= lock_mtime + 2.0
-    except OSError:
-        return True  # no /proc (non-Linux): err on never-condemn-alive
-
-
-def _chk_lock_condemn(lock: str) -> tuple[int | None, float] | None:
-    """Condemnation evidence — (holder_pid_or_None, lock_mtime) — when
-    the lock is stale AT THIS INSTANT, else None. Stale means: the
-    recorded holder is verifiably dead, or the lock is older than
-    _LOCK_STALE_SEC and the holder cannot be verified as the genuine
-    creator (pid file missing/unreadable, or a RECYCLED pid — alive
-    but started after the lock was stamped). A genuinely-alive holder
-    is never stale: a legitimate replay can outlive any age threshold
-    under load, and condemning a live holder would start a second
-    concurrent replay on the shared checkpoint.
-
-    The evidence is captured HERE, at condemnation time, and passed to
-    _chk_lock_reclaim — re-reading it later re-opens the steal race:
-    if another waiter reclaims and mkdir-acquires a fresh lock between
-    this check and a late read, the late read captures the FRESH
-    holder's pid, the reclaim verify trivially passes, and a live lock
-    is deleted (two concurrent writers on the shared checkpoint)."""
-    import os
-    import time
-
-    try:
-        mtime = os.path.getmtime(lock)
-    except OSError:
-        return None  # lock vanished — next mkdir attempt just wins
-    age = time.time() - mtime
-    pid = _lock_holder_pid(lock)
-    evidence = (pid, mtime)
-    if pid is None or pid == os.getpid():
-        # unstamped, or our own pid on a lock we failed to acquire (a
-        # crashed earlier attempt in THIS process): only age condemns
-        return evidence if age > _LOCK_STALE_SEC else None
-    if not _pid_is_lock_holder(pid, mtime):
-        # dead → reclaim now; recycled-alive → reclaim once aged out
-        try:
-            os.kill(pid, 0)
-        except ProcessLookupError:
-            return evidence
-        return evidence if age > _LOCK_STALE_SEC else None
-    return None  # verified genuine live holder — never condemn
-
-
-def _chk_lock_holder_stale(lock: str) -> bool:
-    """Boolean view of _chk_lock_condemn (tests / callers that only
-    need the verdict, not the evidence)."""
-    return _chk_lock_condemn(lock) is not None
-
-
-def _chk_lock_reclaim(
-    lock: str, condemned: tuple[int | None, float]
-) -> None:
-    """Reclaim a condemned lock with rename-aside + VERIFY + restore.
-
-    ``condemned`` is the (pid, mtime) evidence _chk_lock_condemn
-    captured at condemnation time — never re-read here (see its
-    docstring for the race a late capture re-opens).
-
-    1. atomically rename the lock to a per-attempt-unique grave —
-       exactly one racing waiter's rename succeeds;
-    2. verify the grave still carries the condemned incarnation: same
-       stamped pid AND same directory mtime (rename preserves the
-       dir's own mtime, and every fresh lock gets a fresh mtime). A
-       mismatch means the rename grabbed a DIFFERENT waiter's freshly
-       acquired lock (condemn → other waiter reclaims and wins mkdir
-       → our rename lands on its new lock), so rename it straight
-       back.
-
-    A bare rename-then-delete closes the delete race but not this
-    steal race; the verify step does. Residual: restoring can itself
-    collide with a third waiter's brand-new mkdir in the microseconds
-    we hold the grave — then the stolen lock is deleted and its owner
-    degrades to the pid-private checkpoint path (safe, just slower);
-    the shared checkpoint never gains a second concurrent writer
-    through THIS path because the restored/deleted dir is the one its
-    owner's release targets."""
-    import os
-    import shutil
-    import uuid
-
-    pid, mtime = condemned
-    grave = f"{lock}.reap{os.getpid()}_{uuid.uuid4().hex[:8]}"
-    try:
-        os.rename(lock, grave)
-    except OSError:
-        return  # another waiter reclaimed first (or holder released)
-    try:
-        grave_mtime: float | None = os.path.getmtime(grave)
-    except OSError:
-        grave_mtime = None  # grave itself raced away — nothing to do
-    same_incarnation = (
-        grave_mtime is not None
-        and abs(grave_mtime - mtime) < 1e-6
-        and _lock_holder_pid(grave) == pid
-    )
-    if not same_incarnation:
-        try:
-            os.rename(grave, lock)  # stole a fresh lock — put it back
-            return
-        except OSError:
-            pass  # lock path re-taken meanwhile: fall through, delete
-    shutil.rmtree(grave, ignore_errors=True)
-
-
-def _chk_lock_release(lock: str) -> None:
-    import shutil
-
-    shutil.rmtree(lock, ignore_errors=True)
-
-
 @query(
     "t20_state_store_reader",
     # The state store's final content for the t8-shaped tracker IS the
@@ -1517,59 +1351,20 @@ def t20_state_store_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     touching the source stream (measured, not just claimed: the r8
     RocksDB twin in tests/test_streaming.py runs this tracker + state
     source under RocksDBStateStoreProvider and matches the batch
-    aggregate). The staged checkpoint is content-keyed
-    under /tmp; the tracker is (re)started on it every call — on an
-    existing checkpoint that is a t13-style RESTART that finds no new
-    files and commits nothing, which both exercises recovery and
-    guarantees the StateStoreCoordinator RPC endpoint exists in this
-    process (the state source resolves stores through it, and Spark
-    only creates it when a streaming query has run — a fresh process
-    reading a cold checkpoint fails with RpcEndpointNotFoundException
-    otherwise; observed, hence no read-only fast path).
+    aggregate). The checkpoint is content-keyed under this process's
+    scratch root (harness.scratch_dir); the tracker is (re)started on it
+    every call — on the checkpoint an earlier call in the same process
+    left, that is a t13-style RESTART that finds no new files and
+    commits nothing, which both exercises recovery and guarantees the
+    StateStoreCoordinator RPC endpoint exists (the state source
+    resolves stores through it, and Spark only creates it when a
+    streaming query has run — reading a checkpoint with no query run
+    in the process fails with RpcEndpointNotFoundException; observed,
+    hence no read-only fast path).
     """
-    import os
-
     import pandas as pd
 
-    # Keyed on the dataset FINGERPRINT (not the path — regenerating data
-    # in place must invalidate the checkpoint, or the restarted file
-    # source sees no new files and serves stale state). The checkpoint
-    # is SHARED across processes under an atomic-mkdir lock: every call
-    # must (re)run the tracker in ITS process anyway (the state source
-    # resolves stores through the StateStoreCoordinator, which Spark
-    # only creates once a streaming query has run here), and a restart
-    # that finds no new files commits nothing, so the lock only needs
-    # to serialize the replay window — the lazy store read afterwards
-    # is safe concurrently. The lock records the holder's pid so a
-    # waiter can RECLAIM a stale lock (holder verifiably dead, or lock
-    # older than 5 min) instead of waiting out the full 60 s; the
-    # holder releases in a try/finally entered the moment mkdir
-    # succeeds, so an exception during stream construction can no
-    # longer strand the lock. If the lock genuinely stays contended,
-    # fall back to a pid-private checkpoint removed at process exit —
-    # no per-process /tmp leakage either way (the pid-suffix-forever
-    # variant leaked one full state store per process and could hand
-    # a pid-reusing process a dead one's checkpoint).
-    import atexit
-    import shutil
-    import time
-
-    chk = f"/tmp/nipd_chk_{dataset_tag(sf_dir, 't20')}"
-    lock = chk + ".lock"
-    acquired = False
-    for _ in range(120):  # bounded wait: holders finish in seconds
-        if _chk_lock_try_acquire(lock):
-            acquired = True
-            break
-        condemned = _chk_lock_condemn(lock)
-        if condemned is not None:
-            _chk_lock_reclaim(lock, condemned)  # rename-aside+verify
-            time.sleep(0.05)  # a failing reclaim must not spin the
-            continue          # bounded wait down in milliseconds
-        time.sleep(0.5)
-    if not acquired:
-        chk = f"{chk}_{os.getpid()}"
-        atexit.register(shutil.rmtree, chk, ignore_errors=True)
+    chk = scratch_dir(sf_dir, "t20")
 
     out_schema = (
         "user_id long, n_seen long, max_value double, n_purchase long"
@@ -1593,33 +1388,25 @@ def t20_state_store_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
+    stream = events_stream(spark, sf_dir, parts=4, one_file_per_trigger=True)
+    updates = stream.groupBy("user_id").applyInPandasWithState(
+        track, out_schema, state_schema, "update", "NoTimeout"
+    )
+    # foreachBatch + noop write: a RECOVERABLE sink (the memory sink
+    # rejects restarts from a checkpoint) that still forces each
+    # micro-batch's full execution so state commits; the sink output
+    # itself is irrelevant here — the STORE is the result.
+    q = start_pinned(
+        updates.writeStream.outputMode("update")
+        .foreachBatch(
+            lambda df, _id: df.write.format("noop").mode("overwrite").save()
+        )
+        .option("checkpointLocation", chk)
+    )
     try:
-        stream = events_stream(
-            spark, sf_dir, parts=4, one_file_per_trigger=True
-        )
-        updates = stream.groupBy("user_id").applyInPandasWithState(
-            track, out_schema, state_schema, "update", "NoTimeout"
-        )
-        # foreachBatch + noop write: a RECOVERABLE sink (the memory sink
-        # rejects restarts from a checkpoint) that still forces each
-        # micro-batch's full execution so state commits; the sink output
-        # itself is irrelevant here — the STORE is the result.
-        q = start_pinned(
-            updates.writeStream.outputMode("update")
-            .foreachBatch(
-                lambda df, _id: df.write.format("noop")
-                .mode("overwrite")
-                .save()
-            )
-            .option("checkpointLocation", chk)
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        q.processAllAvailable()
     finally:
-        if acquired:
-            _chk_lock_release(lock)
+        q.stop()
 
     return spark.read.format("statestore").load(chk).select(
         F.col("key.user_id").alias("user_id"),

@@ -2,6 +2,7 @@
 
 Pins that keep the DuckDB differential oracle stable:
   - session timezone UTC (parquet timestamps render identically both engines)
+  - no TIMESTAMP_NTZ inference: parquet timestamps read as TimestampType
   - ANSI mode on (Spark 4 default; DuckDB is ANSI-like)
   - Arrow enabled (pandas-UDF / toPandas fast path)
   - AQE on with partition coalescing (right-sizes tiny-SF shuffles and
@@ -87,6 +88,10 @@ def get_spark(
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        # parquet timestamps written with isAdjustedToUTC=false read as
+        # TimestampType, whichever table a session loads first (with the
+        # tz pinned to UTC the values equal the NTZ reading)
+        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.sql.ansi.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")

@@ -10,6 +10,9 @@ genuine StreamExecution (watermarks, state store and all).
 µs-timestamp fixtures stream natively as TimestampType; ns-vintage
 fixtures are read as long and converted to µs TimestampType.
 
+Staged sources, file sinks and checkpoints of the streaming family live
+under one scratch root per process (``scratch_root``/``scratch_dir``).
+
 Scale notes (100 TB / production): swap the file source for Kafka and
 the memory sink for foreachBatch/parquet — the query body is unchanged.
 State stores default to HDFS-backed here; RocksDB
@@ -18,6 +21,9 @@ State stores default to HDFS-backed here; RocksDB
 
 from __future__ import annotations
 
+import atexit
+import os
+import shutil
 import uuid
 from contextlib import contextmanager
 
@@ -93,6 +99,16 @@ def pinned_session(spark: SparkSession) -> SparkSession:
         return cached
     child = spark.newSession()
     child.conf.set("spark.sql.shuffle.partitions", str(state_partitions(spark)))
+    # Checkpoints here are always local (scratch_root or Spark's temp
+    # dir). The default FileContext manager's rename stats each file
+    # through RawLocalFileSystem.getFileLinkStatus, which without
+    # libhadoop forks a `readlink` per checkpoint file; FileSystem's
+    # rename on the local FS is the same check-then-rename, fork-free.
+    child.conf.set(
+        "spark.sql.streaming.checkpointFileManagerClass",
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager",
+    )
     setattr(child, _PIN_ATTR, True)
     spark._nipd_pin_child_ref = child  # noqa: SLF001
     return child
@@ -111,22 +127,51 @@ def _events_raw_schema(ts_is_ns: bool) -> T.StructType:
     )
 
 
-def _stage_dir(sf_dir: str, parts: int = 1) -> str:
-    """The parquet file source requires a *directory*; testdata is a flat
-    read-only file. Stage a /tmp dir (idempotent): a symlink for parts=1,
-    or the file split into ``parts`` chunk files so maxFilesPerTrigger=1
-    yields a real multi-micro-batch replay for stateful operators.
+_SCRATCH_ROOT: str | None = None
 
-    Content-keyed (catalog.dataset_tag): regenerating the data under
-    sf_dir in place yields a fresh stage dir, never a stale replay."""
-    import os
 
-    import pyarrow.parquet as pq
+def scratch_root() -> str:
+    """This process's scratch directory for the streaming family's
+    staged sources, sinks and checkpoints: created on first use, removed
+    when the process that created it exits (a forked child inherits the
+    exit hook but not the ownership).
 
+    Private to the process, so no result depends on what another
+    process left under /tmp, and no two processes ever write the same
+    checkpoint or stage the same part files. In-process reuse (the
+    ``.done`` markers, t20's restart) keeps a second call fast."""
+    global _SCRATCH_ROOT
+    if _SCRATCH_ROOT is None:
+        root = f"/tmp/nipd_run_{os.getpid()}_{uuid.uuid4().hex[:8]}"
+        os.makedirs(root)
+        atexit.register(_remove_scratch_root, root, os.getpid())
+        _SCRATCH_ROOT = root
+    return _SCRATCH_ROOT
+
+
+def _remove_scratch_root(root: str, owner_pid: int) -> None:
+    if os.getpid() == owner_pid:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def scratch_dir(sf_dir: str, salt: str) -> str:
+    """A path under ``scratch_root`` keyed on the data's content
+    (catalog.dataset_tag): regenerating the data under sf_dir in place
+    yields a fresh path, never a stale replay or checkpoint."""
     from nipd_spark.catalog import dataset_tag
 
-    tag = dataset_tag(sf_dir, f"stage{parts}")
-    d = f"/tmp/nipd_stream_{tag}"
+    return os.path.join(scratch_root(), dataset_tag(sf_dir, salt))
+
+
+def _stage_dir(sf_dir: str, parts: int = 1) -> str:
+    """The parquet file source requires a *directory*; testdata is a flat
+    read-only file. Stage one under ``scratch_dir`` (idempotent within
+    the process): a symlink for parts=1, or the file split into
+    ``parts`` chunk files so maxFilesPerTrigger=1 yields a real
+    multi-micro-batch replay for stateful operators."""
+    import pyarrow.parquet as pq
+
+    d = scratch_dir(sf_dir, f"stage{parts}")
     src = f"{sf_dir}/events.parquet"
     if parts == 1:
         os.makedirs(d, exist_ok=True)
@@ -167,8 +212,6 @@ def events_stream(
     ts_is_ns = _events_ts_is_ns(sf_dir)
     if ts_is_ns:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    else:
-        spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     reader = spark.readStream.schema(_events_raw_schema(ts_is_ns)).format("parquet")
     if one_file_per_trigger:
         reader = reader.option("maxFilesPerTrigger", 1)

@@ -163,3 +163,23 @@ def test_catalog_adapts_to_both_ts_encodings(spark):
         assert df.schema["ts"].dataType.simpleString() == "timestamp", tag
         results[tag] = [r["ts"] for r in df.orderBy("event_id").collect()]
     assert results["us"] == results["ns"]
+
+
+def test_timestamp_types_independent_of_load_order(spark, sf_dir):
+    """Parquet timestamps read as TimestampType whichever table a
+    session loads first: the no-NTZ-inference conf is set once when
+    the session is built (child sessions inherit it), not when events
+    happens to be loaded. A fresh child session that loads orders
+    before events, then lineitem, must see `timestamp` on all three."""
+    import nipd_spark.catalog as catalog
+
+    s = spark.newSession()
+    got = {
+        col: catalog.load(s, sf_dir, table).schema[col].dataType.simpleString()
+        for table, col in (
+            ("orders", "o_orderdate"),
+            ("events", "ts"),
+            ("lineitem", "l_shipdate"),
+        )
+    }
+    assert got == dict.fromkeys(got, "timestamp"), got

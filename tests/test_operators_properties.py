@@ -2260,127 +2260,6 @@ def test_bpe_merge_expr_escapes_backslashes(spark):
     assert out2 == [[bs, bs, "a"], [bs + "nx"], ["\n", "x"], ["'", bs, "'"]]
 
 
-def test_chk_lock_stale_holder_reclaim(tmp_path, monkeypatch):
-    """t20's checkpoint lock: a crashed holder (dead pid) or an ancient
-    lock dir must be reclaimable; a live holder must not be (ADVICE
-    r7 — the old lock had no staleness recovery, so one crash stalled
-    every later caller 60 s and leaked pid-private checkpoints)."""
-    import os
-    import subprocess
-
-    from nipd_spark.queries import streaming_live as sl
-
-    lock = str(tmp_path / "chk.lock")
-    assert sl._chk_lock_try_acquire(lock)
-    assert not sl._chk_lock_try_acquire(lock)  # held
-    assert not sl._chk_lock_holder_stale(lock)  # we're alive and young
-
-    # dead holder: stamp the pid of a process that has already exited
-    p = subprocess.Popen(["true"])
-    p.wait()
-    with open(os.path.join(lock, "pid"), "w") as fh:
-        fh.write(str(p.pid))
-    assert sl._chk_lock_holder_stale(lock)
-    sl._chk_lock_release(lock)
-    assert sl._chk_lock_try_acquire(lock)  # reclaimed and re-acquired
-
-    # a GENUINE live holder is never stale, however old the lock —
-    # condemning a live holder would start a second concurrent replay
-    # on the shared checkpoint. Genuine = alive AND started before the
-    # lock was stamped; pid 1 (init) is the longest-lived pid in this
-    # pid namespace. The lock mtime must land AFTER /proc/1's start
-    # (else pid 1 looks RECYCLED) yet be older than the staleness
-    # threshold — a fixed epoch offset breaks on a freshly booted
-    # container (r9: 9-minute uptime made `now - 10*stale` predate
-    # init), so derive both from /proc/1's actual start time.
-    import time as _time
-
-    with open(os.path.join(lock, "pid"), "w") as fh:
-        fh.write("1")
-    now = _time.time()
-    old = os.stat("/proc/1").st_ctime + 3.0  # after init start
-    assert old < now, "sub-3s container uptime"
-    monkeypatch.setattr(
-        sl, "_LOCK_STALE_SEC", max((now - old) / 2, 0.5)
-    )
-    os.utime(lock, (old, old))
-    assert not sl._chk_lock_holder_stale(lock)
-
-    # a RECYCLED pid — alive but started AFTER the lock was stamped —
-    # must not shield an aged-out lock (the r8 review finding: a
-    # recycled-to-alive pid made a crashed holder's lock permanently
-    # unreclaimable)
-    alive = subprocess.Popen(["sleep", "30"])
-    try:
-        with open(os.path.join(lock, "pid"), "w") as fh:
-            fh.write(str(alive.pid))
-        os.utime(lock, (1.0, 1.0))  # epoch: stamped before proc start
-        assert sl._chk_lock_holder_stale(lock)
-        # but a YOUNG lock with that same live pid is not condemnable
-        now = _time.time()
-        os.utime(lock, (now, now))
-        assert not sl._chk_lock_holder_stale(lock)
-        os.utime(lock, (1.0, 1.0))
-    finally:
-        alive.kill()
-        alive.wait()
-
-    # unstamped but ancient lock dir: stale by mtime
-    os.remove(os.path.join(lock, "pid"))
-    os.utime(lock, (old, old))
-    assert sl._chk_lock_holder_stale(lock)
-
-    # reclaim is rename-aside atomic: one reclaim wins, a second is a
-    # no-op, and the reclaimed path is immediately re-acquirable
-    condemned = sl._chk_lock_condemn(lock)
-    assert condemned is not None
-    sl._chk_lock_reclaim(lock, condemned)
-    assert not os.path.exists(lock)
-    sl._chk_lock_reclaim(lock, condemned)  # double-reclaim: no raise
-    assert sl._chk_lock_try_acquire(lock)
-    sl._chk_lock_release(lock)
-    assert not os.path.exists(lock)
-
-
-def test_chk_lock_reclaim_spares_fresh_incarnation(tmp_path):
-    """The r8 ADVICE steal race: evidence captured at condemnation
-    time must protect a FRESH lock acquired between the staleness
-    check and the reclaim's rename — the reclaim must notice the
-    incarnation changed (pid or mtime differs) and rename the stolen
-    lock straight back instead of deleting a live holder's lock."""
-    import os
-    import subprocess
-    import time as _time
-
-    from nipd_spark.queries import streaming_live as sl
-
-    lock = str(tmp_path / "chk.lock")
-
-    # incarnation 1: a stale (dead-holder) lock; capture its evidence
-    assert sl._chk_lock_try_acquire(lock)
-    p = subprocess.Popen(["true"])
-    p.wait()
-    with open(os.path.join(lock, "pid"), "w") as fh:
-        fh.write(str(p.pid))
-    old = _time.time() - 10 * sl._LOCK_STALE_SEC
-    os.utime(lock, (old, old))
-    condemned = sl._chk_lock_condemn(lock)
-    assert condemned is not None
-
-    # another waiter reclaims and re-acquires FIRST (fresh incarnation
-    # stamped with OUR live pid and a fresh mtime)
-    sl._chk_lock_reclaim(lock, condemned)
-    assert sl._chk_lock_try_acquire(lock)
-
-    # our (now outdated) condemnation must NOT take the fresh lock
-    sl._chk_lock_reclaim(lock, condemned)
-    assert os.path.exists(lock), "live fresh lock was deleted"
-    assert sl._lock_holder_pid(lock) == os.getpid()
-    # and the fresh incarnation itself is still judged healthy
-    assert not sl._chk_lock_holder_stale(lock)
-    sl._chk_lock_release(lock)
-
-
 def test_l10d_oracle_byte_true_on_non_ascii(spark):
     """l10d's DuckDB twin must address the SAME UTF-8 bytes as Spark's
     binary substring on non-ASCII text (ADVICE r7: the old twin sliced

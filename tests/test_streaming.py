@@ -376,11 +376,10 @@ def test_state_store_reader_restart_stable(spark, sf_dir):
 def test_t20_concurrent_processes_contend_on_lock(tmp_path, sf_dir):
     """Two concurrent t20 invocations in SEPARATE processes (the
     process-pool shape VERDICT r8 item 7 asked for): both must finish
-    and produce identical state reads. This drives the checkpoint
-    lock's acquire/contend/fallback protocol end-to-end — one process
-    wins the mkdir lock and replays the shared checkpoint, the other
-    either waits it out or degrades to the pid-private checkpoint —
-    whereas the unit tests only pin the helper functions."""
+    and produce identical state reads. Each process stages its events
+    and runs its checkpoint under its own scratch root
+    (harness.scratch_root), so neither can see the other's part files
+    or state mid-write."""
     import subprocess
     import sys
 
@@ -422,6 +421,84 @@ def test_t20_concurrent_processes_contend_on_lock(tmp_path, sf_dir):
     ]
     assert len(frames[0]) > 0
     pd.testing.assert_frame_equal(frames[0], frames[1])
+
+
+def _scratch_root_in_subprocess(code: str) -> list[str]:
+    """Run ``code`` in a fresh python that has imported the harness as
+    ``harness``; return its stdout lines."""
+    import os
+    import subprocess
+    import sys
+
+    prelude = (
+        "import os, sys\n"
+        "sys.path.insert(0, os.getcwd())\n"
+        "from nipd_spark.streaming import harness\n"
+    )
+    res = subprocess.run(
+        [sys.executable, "-c", prelude + code],
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    assert res.returncode == 0, res.stderr[-2000:]
+    return res.stdout.split()
+
+
+def test_scratch_root_private_per_process_and_removed_at_exit():
+    """Two processes get two scratch roots, each exists while its
+    process runs, is the same on every call in that process, and is
+    gone once the process exits."""
+    import os
+
+    code = (
+        "r = harness.scratch_root()\n"
+        "assert os.path.isdir(r) and harness.scratch_root() == r\n"
+        "print(r)\n"
+    )
+    (a,) = _scratch_root_in_subprocess(code)
+    (b,) = _scratch_root_in_subprocess(code)
+    assert a != b
+    assert not os.path.exists(a)
+    assert not os.path.exists(b)
+
+
+def test_scratch_root_survives_forked_child_exit():
+    """A forked child inherits the exit hook, but only the process that
+    created the root removes it."""
+    import os
+
+    code = (
+        "r = harness.scratch_root()\n"
+        "pid = os.fork()\n"
+        "if pid == 0:\n"
+        "    sys.exit(0)\n"
+        "os.waitpid(pid, 0)\n"
+        "assert os.path.isdir(r), 'a forked child removed the root'\n"
+        "print(r)\n"
+    )
+    (root,) = _scratch_root_in_subprocess(code)
+    assert not os.path.exists(root)
+
+
+def test_scratch_root_follows_relocated_stage_root(tmp_path, sf_dir):
+    """perfbench's relocate_stage_root, applied before the first stream,
+    moves the scratch root (and so every staged source, sink and
+    checkpoint of the streaming family) under the given directory."""
+    import os
+
+    code = (
+        "from perfbench.worker import relocate_stage_root\n"
+        f"relocate_stage_root({str(tmp_path)!r})\n"
+        "print(harness.scratch_root())\n"
+        f"print(harness.scratch_dir({sf_dir!r}, 't20'))\n"
+    )
+    root, sub = _scratch_root_in_subprocess(code)
+    assert os.path.dirname(root) == str(tmp_path)
+    assert os.path.basename(root).startswith("nipd_run_")
+    assert os.path.dirname(sub) == root
+    assert not os.path.exists(root)
 
 
 def test_t19_boundary_corpus_matches_oracle(spark, tmp_path):

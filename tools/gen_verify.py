@@ -6,7 +6,10 @@ makes the artifact a build product instead of hand-written prose, so it
 cannot drift from the measured numbers:
 
 1. clean-slate wipe of /tmp/nipd_* staged fixtures (scale replicas
-   kept) — exercises every stateful query's self-heal path;
+   kept) — the outputs non-streaming modules (sources, multimodal,
+   similarity) keep across processes, and the scratch roots of crashed
+   processes (the streaming family's per-process root is removed when
+   its process exits); exercises those queries' self-heal paths;
 2. FULL registry sweep at sf0.01 from a FOREIGN cwd in a fresh
    process (the driver's exact vantage);
 3. FULL registry sweep at sf0.001 (tools/diffcheck.py), with the five
