@@ -172,9 +172,11 @@ def is_big_tier(sf_dir: str) -> bool:
 
 
 def dataset_tag(sf_dir: str, salt: str = "") -> str:
-    """Content-sensitive tag for /tmp staging and checkpoints: sha1 over
-    the (name, size, mtime_ns) of every table file under ``sf_dir``,
-    plus the path and a per-use salt.
+    """Content-sensitive tag for staged artifacts and checkpoints (the
+    directory name ``harness.scratch_dir`` uses under the process's
+    scratch root) and for session catalog names: sha1 over the
+    (name, size, mtime_ns) of every table file under ``sf_dir``, plus
+    the path and a per-use salt.
 
     Keying derived state on the PATH alone is a stale-reuse hazard: if
     the data under sf_dir is regenerated in place, a path-keyed staged

@@ -16,8 +16,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from nipd_spark.catalog import dataset_tag, load
+from nipd_spark.catalog import load
 from nipd_spark.registry import query
+from nipd_spark.streaming.harness import scratch_dir
 
 
 def _make_decoder():
@@ -94,9 +95,9 @@ def l10_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("l10b_multimodal_roundtrip", sql=None, tags=("L10", "S6"))
 def l10b_multimodal_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Parquet round-trip of a multimodal row (binary + struct + array):
-    write to /tmp, read back, verify payload integrity end-to-end
-    (rows-only; the integrity check is inside the query — mismatches
-    would change the row count)."""
+    write under ``scratch_dir``, read back, verify payload integrity
+    end-to-end (rows-only; the integrity check is inside the query —
+    mismatches would change the row count)."""
     import os
 
     docs = load(spark, sf_dir, "documents").limit(100)
@@ -107,8 +108,7 @@ def l10b_multimodal_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.split("text", " ").alias("tokens"),
         F.sha2(F.encode("text", "UTF-8"), 256).alias("sha_before"),
     )
-    tag = dataset_tag(sf_dir, "mm")
-    path = f"/tmp/nipd_modal_{tag}"
+    path = scratch_dir(sf_dir, "mm")
     if not os.path.exists(path):
         modal.write.mode("overwrite").parquet(path + ".tmp")
         os.rename(path + ".tmp", path)

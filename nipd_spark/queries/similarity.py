@@ -5,10 +5,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from nipd_spark.catalog import dataset_tag, load
+from nipd_spark.catalog import load
 from nipd_spark.operators import knn, lsh, vector
 from nipd_spark.oracle import dround
 from nipd_spark.registry import query
+from nipd_spark.streaming.harness import scratch_dir
 
 _DUCK_COS = (
     "list_sum(list_transform(range(1, 65), "
@@ -624,13 +625,11 @@ def l56_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     Rows-only for the driver (probe set is approximate), inheriting
     l5b's anchors: probe-all == exact kNN and bit-exact re-rank.
     """
-    import hashlib
     import os
 
     from nipd_spark.operators import ivf
 
-    tag = dataset_tag(sf_dir, "ivf_index")
-    idx = f"/tmp/nipd_ivf_{tag}"
+    idx = scratch_dir(sf_dir, "ivf_index")
     e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     if not os.path.exists(idx):
         cen = ivf.train_centroids(e, n_lists=8, iters=2).cache()

@@ -3,14 +3,14 @@ semi-structured text, S5 in-memory, S6 sink round-trip).
 
 Reference realization [PK]: ``pandas.read_csv``/``read_table`` over
 GATK VariantsToTable / bcftools-query TSVs, and VCF-style files with
-``##`` meta headers. Files are staged deterministically under /tmp from
-the corpus itself, so the DuckDB oracle can validate against the
-original tables.
+``##`` meta headers. Files are staged deterministically from the corpus
+itself under ``harness.scratch_dir`` (content-keyed, private to the
+process), so the DuckDB oracle can validate against the original
+tables.
 """
 
 from __future__ import annotations
 
-import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -19,11 +19,7 @@ from pyspark.sql import types as T
 
 from nipd_spark.catalog import load
 from nipd_spark.registry import query
-
-
-def _stage(sf_dir: str, name: str) -> str:
-    tag = hashlib.sha1(f"{sf_dir}|{name}".encode()).hexdigest()[:10]
-    return f"/tmp/nipd_src_{tag}"
+from nipd_spark.streaming.harness import scratch_dir
 
 
 @query(
@@ -34,7 +30,7 @@ def _stage(sf_dir: str, name: str) -> str:
 def s2_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TSV sink + source round-trip with an explicit schema (the
     variant-table TSV ingest path). No inferSchema — SURVEY.md §1.2."""
-    d = _stage(sf_dir, "nation_tsv")
+    d = scratch_dir(sf_dir, "nation_tsv")
     if not os.path.exists(d):
         load(spark, sf_dir, "nation").coalesce(1).write.mode("overwrite").options(
             sep="\t", header=True
@@ -57,7 +53,7 @@ def s2_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def s3_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON-lines sink + source round-trip with explicit schema."""
-    d = _stage(sf_dir, "supplier_json")
+    d = scratch_dir(sf_dir, "supplier_json")
     if not os.path.exists(d):
         load(spark, sf_dir, "supplier").coalesce(1).write.mode("overwrite").json(
             d + ".tmp"
@@ -96,7 +92,7 @@ def s4_semistructured_vcf(spark: SparkSession, sf_dir: str) -> DataFrame:
     INFO-style packed field (``k=<n>``) is split with str ops, exactly
     how VCF INFO is handled.
     """
-    d = _stage(sf_dir, "vcfish")
+    d = scratch_dir(sf_dir, "vcfish")
     if not os.path.exists(d):
         ev = load(spark, sf_dir, "events").filter(F.col("event_id") < 200)
         body = ev.select(
@@ -170,8 +166,8 @@ def s6b_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     key reused across many queries at scale: pay the shuffle once at
     write time, never again.
     """
-    tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:8]
-    base = f"/tmp/nipd_bucketed_{tag}"
+    base = scratch_dir(sf_dir, "s6b")
+    tag = os.path.basename(base)
     for name, key in (("orders", "o_orderkey"), ("lineitem", "l_orderkey")):
         tbl = f"b_{name}_{tag}"
         if not spark.catalog.tableExists(tbl):
@@ -215,8 +211,7 @@ def s6c_partitioned_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     directories are never listed, let alone read (asserted in
     tests/test_plan_quality.py).
     """
-    tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:8]
-    out = f"/tmp/nipd_part_{tag}/events"
+    out = f"{scratch_dir(sf_dir, 'events_by_type')}/events"
     if not os.path.exists(f"{out}/_SUCCESS"):
         load(spark, sf_dir, "events").write.mode("overwrite").partitionBy(
             "event_type"
@@ -274,7 +269,7 @@ def s7_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     original — the round-trip must preserve every value for the hash to
     match). At 100 TB the same write carries partitionBy/bucketBy; the
     scan gets the identical pushdown/pruning treatment as parquet."""
-    d = _stage(sf_dir, "part_orc")
+    d = scratch_dir(sf_dir, "part_orc")
     if not os.path.exists(d):
         load(spark, sf_dir, "part").write.mode("overwrite").orc(d + ".tmp")
         os.rename(d + ".tmp", d)
@@ -311,8 +306,7 @@ def s6d_dynamic_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is the 100 TB star-schema staple: "scan only the partitions
     the filtered dimension selects" without hand-propagating the
     filter to the fact."""
-    tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:8]
-    out = f"/tmp/nipd_part_{tag}/events"
+    out = f"{scratch_dir(sf_dir, 'events_by_type')}/events"
     if not os.path.exists(f"{out}/_SUCCESS"):
         load(spark, sf_dir, "events").write.mode("overwrite").partitionBy(
             "event_type"
@@ -358,9 +352,8 @@ def s6e_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     touches — no full-table rewrite, no read-modify-write of unrelated
     data. (With Delta/Iceberg available, connectors.py MERGE replaces
     this at file granularity.)"""
-    tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:8]
-    out = f"/tmp/nipd_dynover_{tag}/events"
-    done = f"/tmp/nipd_dynover_{tag}/_MERGED"
+    base = scratch_dir(sf_dir, "s6e")
+    out, done = f"{base}/events", f"{base}/_MERGED"
     ev = load(spark, sf_dir, "events")
     if not os.path.exists(done):
         ev.write.mode("overwrite").partitionBy("event_type").parquet(out)
@@ -401,7 +394,7 @@ def s9_text_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: text files split by line ranges exactly like any
     file-based scan; the parse is one map-side projection.
     """
-    d = _stage(sf_dir, "doc_lines")
+    d = scratch_dir(sf_dir, "doc_lines")
     if not os.path.exists(d):
         docs = load(spark, sf_dir, "documents")
         docs.select(
@@ -448,7 +441,7 @@ def s10_binary_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     blob); digesting is map-side. Media payloads take exactly this path
     into the multimodal stage (l10).
     """
-    d = _stage(sf_dir, "lang_blobs")
+    d = scratch_dir(sf_dir, "lang_blobs")
     if not os.path.exists(d):
         import pyarrow.parquet as pq_mod
 
@@ -504,7 +497,7 @@ def s11_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout stabilizes, since footer merging at planning time costs a
     listing pass over files (use a metastore table at real scale).
     """
-    d = _stage(sf_dir, "supplier_evolved")
+    d = scratch_dir(sf_dir, "supplier_evolved")
     sup = load(spark, sf_dir, "supplier")
     if not os.path.exists(d):
         tmp = d + ".tmp"
@@ -561,7 +554,7 @@ def s12_zorder_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_plan_quality.py asserts the physical skip: most staged
     row groups fall entirely outside the box stats.
     """
-    d = _stage(sf_dir, "lineitem_zorder")
+    d = scratch_dir(sf_dir, "lineitem_zorder")
     li = load(spark, sf_dir, "lineitem")
     if not os.path.exists(d):
         z = li.withColumn(
@@ -612,8 +605,8 @@ def s13_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     repair path for tables that already fragmented.
     tests/test_plan_quality.py pins shard counts and row preservation.
     """
-    frag = _stage(sf_dir, "orders_fragmented")
-    compact = _stage(sf_dir, "orders_compacted")
+    frag = scratch_dir(sf_dir, "orders_fragmented")
+    compact = scratch_dir(sf_dir, "orders_compacted")
     o = load(spark, sf_dir, "orders")
     if not os.path.exists(frag):
         o.repartition(64).write.mode("overwrite").parquet(frag + ".tmp")
@@ -663,7 +656,7 @@ def s14_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     lazily), so the result caches the parsed batch first — documented
     requirement, not a workaround.
     """
-    d = _stage(sf_dir, "supplier_corrupt_jsonl")
+    d = scratch_dir(sf_dir, "supplier_corrupt_jsonl")
     sup = load(spark, sf_dir, "supplier")
     if not os.path.exists(d):
         js = sup.select(
@@ -968,13 +961,10 @@ def s16_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     computes the same from the source, so publication is proven
     lossless.
     """
-    import hashlib
-    import os
     import shutil
 
-    tag = hashlib.sha1(f"{sf_dir}|s16".encode()).hexdigest()[:10]
-    staging = f"/tmp/nipd_wap_staging_{tag}"
-    published = f"/tmp/nipd_wap_published_{tag}"
+    base = scratch_dir(sf_dir, "s16")
+    staging, published = f"{base}/staging", f"{base}/published"
     if not os.path.exists(published):
         shutil.rmtree(staging, ignore_errors=True)
         o = load(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "O")
@@ -1021,11 +1011,7 @@ def s17_parquet_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     present (bloom-enabled file is measurably larger than the same
     data without it) and that results are identical either way.
     """
-    import hashlib
-    import os
-
-    tag = hashlib.sha1(f"{sf_dir}|s17".encode()).hexdigest()[:10]
-    out = f"/tmp/nipd_bloom_{tag}"
+    out = scratch_dir(sf_dir, "s17")
     if not os.path.exists(out):
         (
             load(spark, sf_dir, "orders")
@@ -1064,13 +1050,11 @@ def s18_managed_table_ddl(spark: SparkSession, sf_dir: str) -> DataFrame:
     answers from the raw sources, proving the DDL round-trip lost
     nothing.
     """
-    import hashlib
-
     from nipd_spark.catalog import register_views
 
     register_views(spark, sf_dir)
-    tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:8]
-    tbl = "supplier_mart_" + tag
+    location = scratch_dir(sf_dir, "s18")
+    tbl = "supplier_mart_" + os.path.basename(location)
     spark.sql(f"DROP TABLE IF EXISTS {tbl}")
     # explicit LOCATION: the default warehouse dir is $PWD/spark-warehouse,
     # and the caller's cwd is not ours to write into
@@ -1078,7 +1062,7 @@ def s18_managed_table_ddl(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"""
         CREATE TABLE {tbl} (
           n_name STRING, s_suppkey BIGINT, s_acctbal DOUBLE
-        ) USING PARQUET LOCATION '/tmp/nipd_mart_{tag}'
+        ) USING PARQUET LOCATION '{location}'
         """
     )
     spark.sql(
@@ -1128,11 +1112,7 @@ def s19_compression_codecs(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan bill too (decode cost < saved IO for zstd level-default on
     text-heavy columns).
     """
-    import hashlib
-    import os
-
-    tag = hashlib.sha1(f"{sf_dir}|s19".encode()).hexdigest()[:10]
-    out = f"/tmp/nipd_zstd_{tag}"
+    out = scratch_dir(sf_dir, "s19")
     if not os.path.exists(out):
         (
             load(spark, sf_dir, "lineitem")
@@ -1194,12 +1174,21 @@ def sql5_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "s20_file_provenance",
+    # Oracle: the chunking rederived from events itself (4 chunks of
+    # ceil(n/4) rows in event_id order), never from the staged files —
+    # an oracle that reads Spark's own stage cannot catch a stale one.
     sql="""
-    SELECT regexp_extract(filename, '[^/]+$', 0) AS file_name,
+    WITH numbered AS (
+      SELECT event_id,
+             row_number() OVER (ORDER BY event_id) - 1 AS i,
+             CAST(ceil(count(*) OVER () / 4) AS BIGINT) AS step
+      FROM events
+    )
+    SELECT 'chunk' || CAST(i // step AS VARCHAR) || '.parquet' AS file_name,
            count(*) AS n_rows,
            min(event_id) AS min_id,
            max(event_id) AS max_id
-    FROM read_parquet('/tmp/nipd_s20_parts/*.parquet', filename=true)
+    FROM numbered
     GROUP BY file_name
     ORDER BY file_name
     """,
@@ -1211,20 +1200,19 @@ def s20_file_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     row_index) without any column existing in the data — the lineage
     hook for quarantining a bad producer file, auditing a backfill, or
     building per-file quality scores. The events table is staged as 4
-    deterministic chunk files; rows are grouped by originating file.
-    DuckDB's ``filename=true`` is the same feature — both engines
-    must attribute every row to the same chunk.
+    chunk files in event_id order; rows are grouped by originating
+    file, so every row must be attributed to the chunk its event_id
+    rank puts it in.
     """
-    import os
     import shutil
 
     import pyarrow.parquet as pq
 
-    d = "/tmp/nipd_s20_parts"
+    d = scratch_dir(sf_dir, "s20")
     if not os.path.exists(f"{d}/.staged"):
         shutil.rmtree(d, ignore_errors=True)
         os.makedirs(d)
-        t = pq.read_table(f"{sf_dir}/events.parquet")
+        t = pq.read_table(f"{sf_dir}/events.parquet").sort_by("event_id")
         step = (t.num_rows + 3) // 4
         for i in range(4):
             pq.write_table(t.slice(i * step, step), f"{d}/chunk{i}.parquet")
@@ -1352,12 +1340,12 @@ def s21_merge_into(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _supplier_snapshot_table(spark: SparkSession, sf_dir: str) -> str:
-    """Staged 4-version supplier ledger (shared by s22/s23), each step
+    """Staged 4-version supplier ledger (shared by s22/s23/s24), each step
     committed through operators/snapshots.write_snapshot:
       v1 base load; v2 MERGE top-up (+100, nation 3); v3 MERGE delete
       (negative balances); v4 MERGE insert (nation-7 rows cloned to
-      key+1_000_000 with balance 0). Built incrementally, so a store
-      staged by an older code vintage upgrades in place."""
+      key+1_000_000 with balance 0). Built once per process under
+      ``scratch_dir``; the queries after the first reuse it."""
     from nipd_spark.operators.merge import merge_into
     from nipd_spark.operators.snapshots import (
         latest_version,
@@ -1365,7 +1353,7 @@ def _supplier_snapshot_table(spark: SparkSession, sf_dir: str) -> str:
         write_snapshot,
     )
 
-    table = _stage(sf_dir, "supplier_snapshots")
+    table = scratch_dir(sf_dir, "supplier_snapshots")
     while (latest_version(table) or 0) < 4:
         v = (latest_version(table) or 0) + 1
         if v == 1:
@@ -1632,8 +1620,7 @@ def s25_snapshot_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_snapshot,
     )
 
-    tag = hashlib.sha1(f"{sf_dir}|s25".encode()).hexdigest()[:10]
-    table = f"/tmp/nipd_retention_{tag}"
+    table = scratch_dir(sf_dir, "s25")
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -1693,11 +1680,7 @@ def s26_xml_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     there is no inference pre-pass over the corpus. One staged file
     here; at scale, one file per shard partition.
     """
-    from nipd_spark.catalog import dataset_tag
-
-    # content-keyed, not path-keyed: regenerating sf_dir in place must
-    # invalidate the staged XML (catalog.dataset_tag rationale)
-    d = f"/tmp/nipd_src_{dataset_tag(sf_dir, 'doc_xml')}"
+    d = scratch_dir(sf_dir, "doc_xml")
     if not os.path.exists(d):
         docs = load(spark, sf_dir, "documents")
         (

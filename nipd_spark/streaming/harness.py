@@ -10,8 +10,10 @@ genuine StreamExecution (watermarks, state store and all).
 µs-timestamp fixtures stream natively as TimestampType; ns-vintage
 fixtures are read as long and converted to µs TimestampType.
 
-Staged sources, file sinks and checkpoints of the streaming family live
-under one scratch root per process (``scratch_root``/``scratch_dir``).
+Every staged artifact of the engine — the streaming family's sources,
+sinks and checkpoints, and the batch queries' staged copies, tables and
+indexes (sources.py, multimodal.py, similarity.py) — lives under one
+scratch root per process (``scratch_root``/``scratch_dir``).
 
 Scale notes (100 TB / production): swap the file source for Kafka and
 the memory sink for foreachBatch/parquet — the query body is unchanged.
@@ -131,15 +133,18 @@ _SCRATCH_ROOT: str | None = None
 
 
 def scratch_root() -> str:
-    """This process's scratch directory for the streaming family's
-    staged sources, sinks and checkpoints: created on first use, removed
-    when the process that created it exits (a forked child inherits the
-    exit hook but not the ownership).
+    """This process's scratch directory for every staged artifact
+    (streaming sources, sinks and checkpoints; the batch queries' staged
+    files, tables and indexes): created on first use, removed when the
+    process that created it exits (a forked child inherits the exit
+    hook but not the ownership).
 
     Private to the process, so no result depends on what another
-    process left under /tmp, and no two processes ever write the same
-    checkpoint or stage the same part files. In-process reuse (the
-    ``.done`` markers, t20's restart) keeps a second call fast."""
+    process left under /tmp or on which tier an earlier process staged,
+    and no two processes ever write the same checkpoint or stage the
+    same files. In-process reuse (the ``.done``/``.staged`` markers,
+    t20's restart) keeps a second call fast. The root of a crashed
+    process is never read by a later one; it costs only disk."""
     global _SCRATCH_ROOT
     if _SCRATCH_ROOT is None:
         root = f"/tmp/nipd_run_{os.getpid()}_{uuid.uuid4().hex[:8]}"

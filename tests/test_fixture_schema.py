@@ -130,7 +130,7 @@ def test_all_sf_dirs_consistent() -> None:
     assert len(set(types.values())) == 1, f"events.ts encoding differs: {types}"
 
 
-def test_catalog_adapts_to_both_ts_encodings(spark):
+def test_catalog_adapts_to_both_ts_encodings(spark, tmp_path):
     """catalog.load must yield identical TimestampType values whether
     events.ts is stored as µs timestamp (current fixtures) or ns
     timestamp (round-1 vintage) — the drift class that broke round 2.
@@ -139,7 +139,6 @@ def test_catalog_adapts_to_both_ts_encodings(spark):
 
     import nipd_spark.catalog as catalog
 
-    base = "/tmp/nipd_ts_encoding_test"
     vals_us = [1704067200_000_000, 1704070800_123_456]  # 2024-01-01 UTC
     rows = {
         "event_id": pa.array([0, 1], pa.int64()),
@@ -154,8 +153,8 @@ def test_catalog_adapts_to_both_ts_encodings(spark):
     }
     results = {}
     for tag, ts_arr in cases.items():
-        d = f"{base}_{tag}"
-        os.makedirs(d, exist_ok=True)
+        d = str(tmp_path / tag)
+        os.makedirs(d)
         t = pa.table({"event_id": rows["event_id"], "ts": ts_arr, **{
             k: v for k, v in rows.items() if k != "event_id"}})
         pq.write_table(t, f"{d}/events.parquet")

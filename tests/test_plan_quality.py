@@ -578,10 +578,10 @@ def test_zorder_layout_skips_row_groups(spark, sf_dir):
 
     import pyarrow.parquet as pq
 
-    from nipd_spark.queries.sources import _stage
+    from nipd_spark.streaming.harness import scratch_dir
 
     registry.all_specs()["s12_zorder_skipping"].fn(spark, sf_dir).collect()
-    d = _stage(sf_dir, "lineitem_zorder")
+    d = scratch_dir(sf_dir, "lineitem_zorder")
     total = hit = 0
     for f in glob.glob(d + "/*.parquet"):
         md = pq.ParquetFile(f).metadata
@@ -603,15 +603,15 @@ def test_zorder_layout_skips_row_groups(spark, sf_dir):
 def test_compaction_reduces_file_count(spark, sf_dir):
     import glob
 
-    from nipd_spark.queries.sources import _stage
+    from nipd_spark.streaming.harness import scratch_dir
 
     registry.all_specs()["s13_compaction"].fn(spark, sf_dir).collect()
-    frag = glob.glob(_stage(sf_dir, "orders_fragmented") + "/*.parquet")
-    compact = glob.glob(_stage(sf_dir, "orders_compacted") + "/*.parquet")
+    frag = glob.glob(scratch_dir(sf_dir, "orders_fragmented") + "/*.parquet")
+    compact = glob.glob(scratch_dir(sf_dir, "orders_compacted") + "/*.parquet")
     assert len(frag) >= 32
     assert len(compact) <= 2
-    n_frag = spark.read.parquet(_stage(sf_dir, "orders_fragmented")).count()
-    n_comp = spark.read.parquet(_stage(sf_dir, "orders_compacted")).count()
+    n_frag = spark.read.parquet(scratch_dir(sf_dir, "orders_fragmented")).count()
+    n_comp = spark.read.parquet(scratch_dir(sf_dir, "orders_compacted")).count()
     assert n_frag == n_comp
 
 

@@ -501,6 +501,30 @@ def test_scratch_root_follows_relocated_stage_root(tmp_path, sf_dir):
     assert not os.path.exists(root)
 
 
+def test_only_scratch_root_names_a_tmp_path():
+    """Every staged artifact of the engine lives under
+    harness.scratch_root: of all string constants in nipd_spark/ (the
+    parts of f-strings and SQL embedded in strings included), the only
+    one that contains "/tmp/" is scratch_root's own. No Spark needed."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "nipd_spark"
+    hits = []
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text(), filename=str(path))
+        funcs = [n for n in ast.walk(tree) if isinstance(n, ast.FunctionDef)]
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Constant) and "/tmp/" in str(node.value):
+                owners = [
+                    f.name for f in funcs if f.lineno <= node.lineno <= f.end_lineno
+                ]
+                hits.append(
+                    (path.relative_to(pkg).as_posix(), owners[-1] if owners else None)
+                )
+    assert hits == [("streaming/harness.py", "scratch_root")], hits
+
+
 def test_t19_boundary_corpus_matches_oracle(spark, tmp_path):
     """The advisor's flake scenario, made a permanent fixture: a crafted
     events table where (a) a session's gap-closing event lands INSIDE
