@@ -12,7 +12,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from nipd_spark.session import profile
+from nipd_spark.session import child_session, profile
 
 TABLES = (
     "region",
@@ -32,11 +32,6 @@ TABLES = (
 BROADCAST_DIMS = frozenset({"region", "nation"})
 
 
-# (session-id, sf_dir, table) -> DataFrame. Re-running spark.read.parquet
-# per query re-reads footers and re-resolves schema (~50-100 ms/table);
-# the lazy plan handle is immutable, so caching it is safe.
-_CACHE: dict[tuple[int, str, str], DataFrame] = {}
-
 # ---------------------------------------------------------------------------
 # Tier-adaptive parallelism (r12 optimization round; guide §2.2/§6).
 #
@@ -46,8 +41,8 @@ _CACHE: dict[tuple[int, str, str], DataFrame] = {}
 # 1.1 GB lineitem scans in 9 tasks and every exchange lands in 8 reduce
 # partitions: single-digit parallelism on a 32-thread master (o4's 15M-row
 # window sort ran in 2 scan + 8 sort tasks). Instead of a constant tuned
-# for either tier, derive both knobs from the dataset's on-disk bytes at
-# load time (the "derive from input size" posture the optimization guide
+# for either tier, derive both knobs from the dataset's on-disk bytes
+# (the "derive from input size" posture the optimization guide
 # prescribes; AQE's advisory-size coalescing is the same policy computed
 # at runtime):
 #
@@ -60,25 +55,28 @@ _CACHE: dict[tuple[int, str, str], DataFrame] = {}
 #   scan floor  = minPartitionNum = shuffle count, openCost 1 MB (r13:
 #                                            per-scan split floor so SMALL
 #                                            tables of a mixed-size set
-#                                            still fan out; see autosize)
+#                                            still fan out; see tier_conf)
 #
 # Both are pure functions of DATA SIZE, never of core count, so the
 # driver's lower-core bench runs plan identically and per-core scaling
-# stays measurable. Under SPARK_GRAFT_PROFILE=scale this is a NO-OP: AQE
-# coalesces from the 2000-partition ceiling by advisory size — the
-# cluster-posture answer. SPARK_GRAFT_SHUFFLE_PARTITIONS (explicit
+# stays measurable. Under SPARK_GRAFT_PROFILE=scale there is no tier
+# conf: AQE coalesces from the 2000-partition ceiling by advisory size —
+# the cluster-posture answer. SPARK_GRAFT_SHUFFLE_PARTITIONS (explicit
 # override) also wins; NIPD_SPARK_AUTOSIZE=0 disables entirely.
+#
+# The conf lives in a session, never in a mutation of the caller's:
+# tier_session hands back a cached child session carrying it, and
+# load() and every registered query (registry.query) build on that
+# child. Spark reads these keys when an action runs, so a frame built
+# at one tier keeps its tier's partitioning whatever is loaded next.
 # ---------------------------------------------------------------------------
 _AUTOSIZE_MIN_BYTES = 64 * 1024 * 1024
 _SIZE_CACHE: dict[str, int] = {}  # sf_dir -> total table bytes
-# the conf keys autosize writes
+# the conf keys tier_conf sets
 AUTOSIZE_KEYS = (
     "spark.sql.files.maxPartitionBytes", "spark.sql.shuffle.partitions",
     "spark.sql.files.openCostInBytes", "spark.sql.files.minPartitionNum",
 )
-# session -> (last applied (maxPartitionBytes, shuffle.partitions),
-#             the session's own AUTOSIZE_KEYS values before the first write)
-_AUTOSIZE_APPLIED: dict[int, tuple[tuple[str, str], dict]] = {}
 
 
 def _dir_bytes(sf_dir: str) -> int:
@@ -94,51 +92,22 @@ def _dir_bytes(sf_dir: str) -> int:
     return total
 
 
-def autosize(spark: SparkSession, sf_dir: str) -> None:
-    """Set scan-split size and shuffle-partition count from ``sf_dir``'s
-    on-disk bytes (see module comment). No-op under AQE, under an
-    explicit SPARK_GRAFT_SHUFFLE_PARTITIONS, below the engage floor,
-    or when the target values are already applied to this session.
-
-    SINGLE-TIER-PER-ACTION-WINDOW ASSUMPTION (r12 ADVICE, documented
-    loudly): autosize mutates SESSION-GLOBAL conf at DataFrame-BUILD
-    time, but Spark reads both keys at ACTION time. Build a big-tier
-    plan, then load a sub-floor dir (which restores the session's own
-    values), then execute the big-tier plan — and it silently runs
-    at 8 partitions, the exact pathology autosize exists to fix.
-    Every bench/probe loop in this repo is tier-sequential (all
-    actions on a tier complete before another tier is loaded); keep it
-    that way, or re-invoke autosize(spark, sf_dir) immediately before
-    the action. The restore puts back the session's own values of
-    AUTOSIZE_KEYS, saved before the first big-tier write (covered by
-    tests/test_operators_properties.py::test_autosize_restores_...).
-    """
+def tier_conf(sf_dir: str) -> dict[str, str]:
+    """Scan-split size and shuffle-partition count from ``sf_dir``'s
+    on-disk bytes (see module comment); empty under the scale profile,
+    an explicit SPARK_GRAFT_SHUFFLE_PARTITIONS, NIPD_SPARK_AUTOSIZE=0,
+    or below the engage floor."""
     if os.environ.get("NIPD_SPARK_AUTOSIZE", "1") == "0":
-        return
+        return {}
     if os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS"):
-        return
+        return {}
     if profile() == "scale":
-        return  # AQE coalesces from the ceiling by advisory size
+        return {}  # AQE coalesces from the ceiling by advisory size
     total = _dir_bytes(sf_dir)
-    sid = id(spark)
-    prev, saved = _AUTOSIZE_APPLIED.get(sid, (None, None))
     if total < _AUTOSIZE_MIN_BYTES:
-        # Below the floor: leave whatever the session (or a test /
-        # streaming harness) has configured UNTOUCHED — only restore the
-        # session's own values if an earlier big-tier load changed them.
-        for key, value in (saved or {}).items():
-            if value is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, value)
-        _AUTOSIZE_APPLIED.pop(sid, None)
-        return
+        return {}
     mpb = min(max(total // 128, 8 * 1024 * 1024), 128 * 1024 * 1024)
     sp = min(max(total // (16 * 1024 * 1024), 8), 1024)
-    want = (str(mpb), str(sp))
-    if prev == want:
-        return
-    saved = saved or {key: spark.conf.get(key, None) for key in AUTOSIZE_KEYS}
     # The split size and reduce count above, plus a per-SCAN split
     # floor (r13; guide §6 "minPartitionNum sets a floor
     # on scan parallelism"): ONE global maxPartitionBytes cannot serve a
@@ -154,9 +123,14 @@ def autosize(spark: SparkSession, sf_dir: str) -> None:
     # 4 MB; 1 MB matches these one-file-per-table fixtures (measured
     # paired at 100x, both orderings: l6 1.4x, a17 1.2x, l20/a32 1.1x,
     # q3/w22/o4/l50/l62/l67 neutral).
-    for key, value in zip(AUTOSIZE_KEYS, (*want, "1048576", want[1])):
-        spark.conf.set(key, value)
-    _AUTOSIZE_APPLIED[sid] = (want, saved)
+    return dict(zip(AUTOSIZE_KEYS, (str(mpb), str(sp), "1048576", str(sp))))
+
+
+def tier_session(spark: SparkSession, sf_dir: str) -> SparkSession:
+    """The session that work on ``sf_dir`` runs in: ``spark`` itself
+    when the tier has no conf, else the cached child carrying
+    ``tier_conf(sf_dir)``."""
+    return child_session(spark, tier_conf(sf_dir))
 
 
 def is_big_tier(sf_dir: str) -> bool:
@@ -227,12 +201,15 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     comparisons line up (nipd_spark.oracle.ts_us). Either way callers
     see TimestampType.
     """
-    autosize(spark, sf_dir)  # before the cache check: conf must track the
-    # tier even when the plan handle is cached (split/partition counts are
-    # read from session conf at action time, not at read.parquet time)
-    key = (id(spark), sf_dir, name)
-    if key in _CACHE:
-        return _CACHE[key]
+    spark = tier_session(spark, sf_dir)
+    # (sf_dir, table) -> DataFrame, on the session the frames belong to.
+    # Re-running spark.read.parquet per query re-reads footers and
+    # re-resolves schema (~50-100 ms/table); the lazy plan handle is
+    # immutable, so caching it is safe.
+    frames = vars(spark).setdefault("_nipd_frames", {})
+    df = frames.get((sf_dir, name))
+    if df is not None:
+        return df
     if name == "events" and _events_ts_is_ns(sf_dir):
         from pyspark.sql import functions as F
 
@@ -241,11 +218,13 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     else:
         df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    _CACHE[key] = df
+    frames[(sf_dir, name)] = df
     return df
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register all corpus tables as temp views for the SQL API path."""
+    """Register all corpus tables as temp views for the SQL API path, in
+    ``tier_session(spark, sf_dir)`` (a view registers in its frame's
+    session), which is the session registered queries run in."""
     for t in TABLES:
         load(spark, sf_dir, t).createOrReplaceTempView(t)

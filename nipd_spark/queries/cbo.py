@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from nipd_spark.oracle import dround
 from nipd_spark.registry import query
+from nipd_spark.session import child_session
 
 
 def stats_table(spark: SparkSession, sf_dir: str, name: str) -> str:
@@ -45,9 +46,9 @@ def stats_table(spark: SparkSession, sf_dir: str, name: str) -> str:
     return tbl
 
 
-def _enable_cbo(spark: SparkSession) -> None:
-    spark.conf.set("spark.sql.cbo.enabled", "true")
-    spark.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
+# the cost model these queries plan under, carried by their own child
+# session (session.child_session) so it never leaks into the caller's
+_CBO = {"spark.sql.cbo.enabled": "true", "spark.sql.cbo.joinReorder.enabled": "true"}
 
 
 @query(
@@ -70,7 +71,7 @@ def cbo1_stats_join_reorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost model (not a hint, not raw file size of a filtered scan) makes
     customer and nation the build sides.
     """
-    _enable_cbo(spark)
+    spark = child_session(spark, _CBO)
     o = stats_table(spark, sf_dir, "orders")
     c = stats_table(spark, sf_dir, "customer")
     n = stats_table(spark, sf_dir, "nation")
@@ -107,7 +108,7 @@ def cbo2_filter_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     enough to build a broadcast hash join — the plan heuristics alone
     (size-in-bytes of the unfiltered scan) would shuffle both sides.
     """
-    _enable_cbo(spark)
+    spark = child_session(spark, _CBO)
     li = stats_table(spark, sf_dir, "lineitem")
     o = stats_table(spark, sf_dir, "orders")
     from pyspark.sql import functions as F

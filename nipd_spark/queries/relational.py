@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from nipd_spark.catalog import is_big_tier, load
 from nipd_spark.oracle import dround
 from nipd_spark.registry import query
-from nipd_spark.session import profile
+from nipd_spark.session import child_session, profile
 
 # --------------------------------------------------------------------------
 # Flagship: TPC-H-Q1-style pricing summary (S1 + P2 + A1 + O1)
@@ -1155,18 +1155,24 @@ def j15_bloom_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Catalyst only injects the filter when the join would genuinely
     shuffle (it skips builds that can broadcast by size — at real scale
     orders is fact-sized and the rule fires on its own). To reproduce
-    that decision on the local fixtures we pin the shuffle shape while
-    materializing the optimized plan (QueryExecution caches it), then
-    restore the session confs so every other query keeps its broadcast
-    plans. Semantics are untouched either way — the bloom filter is a
-    pure may-contain pre-filter; the join still verifies equality —
+    that decision on the local fixtures the query runs in a child
+    session (session.child_session) that pins the shuffle shape, so
+    every other query keeps its broadcast plans. Semantics are
+    untouched either way — the bloom filter is a pure may-contain
+    pre-filter; the join still verifies equality —
     which is why the oracle twin is the plain SQL join.
     tests/test_plan_quality.py asserts the BloomFilterMightContain is
     actually in this plan.
     """
+    spark = child_session(spark, {
+        # force the scale-realistic shuffle decision at toy SF
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        # app-side scan floor (10 GB default) — moot at 100 TB
+        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
+    })
     li = load(spark, sf_dir, "lineitem")
     o = load(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "P")
-    df = (
+    return (
         li.hint("merge")
         .join(o, li.l_orderkey == o.o_orderkey)
         .groupBy("o_orderpriority")
@@ -1177,23 +1183,6 @@ def j15_bloom_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("revenue"),
         )
     )
-    overrides = {
-        # force the scale-realistic shuffle decision at toy SF
-        "spark.sql.autoBroadcastJoinThreshold": "-1",
-        # app-side scan floor (10 GB default) — moot at 100 TB
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
-    }
-    saved = {k: spark.conf.get(k) for k in overrides}
-    try:
-        for k, v in overrides.items():
-            spark.conf.set(k, v)
-        # lock the bloom-injected logical plan into this DataFrame's
-        # QueryExecution (lazy val — computed once, under our confs)
-        df._jdf.queryExecution().optimizedPlan()
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
-    return df
 
 
 @query("o5_range_partition_sort", sql=None, tags=("O1", "S6"))

@@ -19,6 +19,7 @@ from pyspark.sql import types as T
 
 from nipd_spark.catalog import load
 from nipd_spark.registry import query
+from nipd_spark.session import child_session
 from nipd_spark.streaming.harness import scratch_dir
 
 
@@ -360,12 +361,9 @@ def s6e_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
         revised = ev.filter(F.col("event_type") == "click").withColumn(
             "value", F.col("value") * 2
         )
-        old_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            revised.write.mode("overwrite").partitionBy("event_type").parquet(out)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", old_mode)
+        revised.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("event_type").parquet(out)
         with open(done, "w") as fh:
             fh.write("ok")
     merged = spark.read.parquet(out)
@@ -2394,13 +2392,14 @@ def sql14_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver loop (c39-style) remains the scale path — this query
     certifies the NATIVE SQL:1999 surface and its exact semantics.
     """
-    # total recursion rows = |orders| (one per order) — the default
-    # 1M safety net is smaller than the 100x replica; raise it once
     from pyspark.sql import Window
 
     from nipd_spark.operators.materialize import spill_checkpoint
 
-    spark.conf.set("spark.sql.cteRecursionRowLimit", str(2_000_000_000))
+    # total recursion rows = |orders| (one per order) — the default
+    # 1M safety net is smaller than the 100x replica; raise it in this
+    # query's own child session
+    spark = child_session(spark, {"spark.sql.cteRecursionRowLimit": "2000000000"})
     o = load(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     # materialize the rn-indexed chain table ONCE: every recursion

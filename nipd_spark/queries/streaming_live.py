@@ -16,9 +16,9 @@ from nipd_spark.oracle import dround, ts_us
 from nipd_spark.registry import query
 from nipd_spark.streaming.harness import (
     events_stream,
+    pinned_session,
     run_to_completion,
     scratch_dir,
-    start_pinned,
 )
 
 
@@ -430,12 +430,12 @@ def t9_stream_parquet_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("event_type") == "purchase")
             .select("event_id", "user_id", "ts", "value")
         )
-        q = start_pinned(
+        q = (
             stream.writeStream.outputMode("append")
             .format("parquet")
             .option("path", out)
             .option("checkpointLocation", chk)
-
+            .start()
         )
         try:
             q.processAllAvailable()
@@ -521,11 +521,11 @@ def t10_stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFram
             shutil.rmtree(cur, ignore_errors=True)
             os.rename(nxt, cur)
 
-        q = start_pinned(
+        q = (
             events_stream(spark, sf_dir, parts=4, one_file_per_trigger=True)
             .writeStream.foreachBatch(merge_batch)
             .option("checkpointLocation", chk)
-
+            .start()
         )
         try:
             q.processAllAvailable()
@@ -686,7 +686,7 @@ def t12_incremental_availablenow(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def run_once() -> None:
         stream = (
-            spark.readStream.schema(
+            pinned_session(spark).readStream.schema(
                 spark.read.parquet(staged).schema
             )
             .format("parquet")
@@ -694,13 +694,13 @@ def t12_incremental_availablenow(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("value") > 100)
             .select("event_id", "event_type", "value")
         )
-        q = start_pinned(
+        q = (
             stream.writeStream.outputMode("append")
             .format("parquet")
             .option("path", out)
             .option("checkpointLocation", chk)
             .trigger(availableNow=True)
-
+            .start()
         )
         q.awaitTermination()  # AvailableNow self-terminates when drained
 
@@ -762,10 +762,11 @@ def t13_stateful_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = f"{base}_src"
     chk = f"{base}_chk"
     name = f"t13_sink_{dataset_tag(sf_dir, 't13')}"
+    pinned = pinned_session(spark)  # the memory sink lives in its catalog
 
     def run_once() -> None:
         agg = (
-            spark.readStream.schema(spark.read.parquet(staged).schema)
+            pinned.readStream.schema(spark.read.parquet(staged).schema)
             .format("parquet")
             .load(src)
             .groupBy("user_id")
@@ -774,12 +775,12 @@ def t13_stateful_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.round(F.sum("value"), 4).alias("total_value"),
             )
         )
-        q = start_pinned(
+        q = (
             agg.writeStream.outputMode("complete")
             .format("memory")
             .queryName(name)
             .option("checkpointLocation", chk)
-
+            .start()
         )
         try:
             q.processAllAvailable()
@@ -797,12 +798,12 @@ def t13_stateful_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     for f in parts[:2]:
         os.symlink(f"{staged}/{f}", f"{src}/{f}")
     run_once()  # run 1: partial state, then "crash"
-    mid = spark.table(name).count()
+    mid = pinned.table(name).count()
     for f in parts[2:]:
         os.symlink(f"{staged}/{f}", f"{src}/{f}")
     run_once()  # resume from checkpoint; drains only the delta
-    assert mid <= spark.table(name).count()  # state grew, never reset
-    return spark.table(name)
+    assert mid <= pinned.table(name).count()  # state grew, never reset
+    return pinned.table(name)
 
 
 @query(
@@ -864,11 +865,12 @@ def t14_python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         def simpleStreamReader(self, schema) -> SimpleDataSourceStreamReader:
             return LcgStreamReader()
 
+    pinned = pinned_session(spark)
     try:
-        spark.dataSource.register(LcgStreamSource)
+        pinned.dataSource.register(LcgStreamSource)
     except Exception:
         pass
-    stream = spark.readStream.format("nipd_lcg_stream").load()
+    stream = pinned.readStream.format("nipd_lcg_stream").load()
     agg = stream.groupBy(F.pmod("id", F.lit(4)).alias("bucket")).agg(
         F.count("*").alias("n"), F.sum("val").alias("total")
     )
@@ -932,11 +934,11 @@ def t15_stream_multi_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
                 batch_df.unpersist()
 
         stream = events_stream(spark, sf_dir, parts=4, one_file_per_trigger=True)
-        q = start_pinned(
+        q = (
             stream.filter(F.col("value") > 50)
             .writeStream.foreachBatch(fan_out)
             .option("checkpointLocation", chk)
-
+            .start()
         )
         try:
             q.processAllAvailable()
@@ -997,11 +999,11 @@ def t16_update_mode_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.round(F.sum("value"), 4).alias("total_value"),
             )
         )
-        q = start_pinned(
+        q = (
             agg.writeStream.outputMode("update")
             .foreachBatch(capture)
             .option("checkpointLocation", chk)
-
+            .start()
         )
         try:
             q.processAllAvailable()
@@ -1140,11 +1142,11 @@ def t18_stream_snapshot_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             write_snapshot(part, table)
 
-        q = start_pinned(
+        q = (
             events_stream(spark, sf_dir, parts=4, one_file_per_trigger=True)
             .writeStream.foreachBatch(commit_batch)
             .option("checkpointLocation", chk)
-
+            .start()
         )
         try:
             q.processAllAvailable()
@@ -1396,12 +1398,13 @@ def t20_state_store_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rejects restarts from a checkpoint) that still forces each
     # micro-batch's full execution so state commits; the sink output
     # itself is irrelevant here — the STORE is the result.
-    q = start_pinned(
+    q = (
         updates.writeStream.outputMode("update")
         .foreachBatch(
             lambda df, _id: df.write.format("noop").mode("overwrite").save()
         )
         .option("checkpointLocation", chk)
+        .start()
     )
     try:
         q.processAllAvailable()

@@ -14,11 +14,14 @@ Discipline enforced here by convention (SURVEY.md §5.2):
 
 from __future__ import annotations
 
+import functools
 import importlib
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+
+from nipd_spark.catalog import tier_session
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -169,13 +172,23 @@ _LOADED = False
 
 
 def query(name: str, sql: str | None = None, tags: tuple[str, ...] = ()):
-    """Decorator: register fn as a queries() entry (and its oracle twin)."""
+    """Decorator: register fn as a queries() entry (and its oracle twin).
+
+    The registered callable runs ``fn`` in ``catalog.tier_session(spark,
+    sf_dir)``, so everything the query builds (loads, temp views, UDF
+    and data-source registrations, createDataFrame/range/sql) lands in
+    the one session that carries the data tier's conf."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in _REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
-        _REGISTRY[name] = QuerySpec(name, fn, sql, tuple(tags), fn.__doc__ or "")
-        return fn
+
+        @functools.wraps(fn)
+        def in_tier(spark: SparkSession, sf_dir: str) -> DataFrame:
+            return fn(tier_session(spark, sf_dir), sf_dir)
+
+        _REGISTRY[name] = QuerySpec(name, in_tier, sql, tuple(tags), fn.__doc__ or "")
+        return in_tier
 
     return deco
 

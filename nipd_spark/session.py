@@ -101,3 +101,42 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def child_session(spark: SparkSession, overrides: dict[str, str]) -> SparkSession:
+    """The session for work that needs its own conf: a clone of
+    ``spark`` (same SparkContext) with ``overrides`` set on top, cached
+    on ``spark`` per overrides. ``spark`` itself when it already carries
+    them, so empty overrides, or a child asked again for its own, cost
+    nothing.
+
+    The one rule for work-specific conf (the data tier's split and
+    partition sizes, a stream's state partitions, a query's optimizer
+    switches): the work runs in a child that carries it, and no engine
+    code mutates the session it was handed. Spark reads most of these
+    keys when an action runs, not when the DataFrame is built, so a
+    conf set and later restored on a shared session silently changes
+    plans built in between; a child's conf is fixed for every frame
+    built on it.
+
+    ``cloneSession``, not ``newSession``: the clone keeps the parent's
+    runtime conf (``__spark_entry__.entry`` sets inferTimestampNTZ at
+    runtime), temp views and UDFs, as they stand when the child is
+    made; newSession sees builder options only. A clone costs 3-10 ms,
+    once per (session, overrides). Temp views, memory-sink tables and
+    data sources registered on a child stay in the child."""
+    carried = getattr(spark, "_nipd_overrides", {})
+    if all(carried.get(k) == v for k, v in overrides.items()):
+        return spark
+    children = vars(spark).setdefault("_nipd_children", {})
+    key = frozenset(overrides.items())
+    child = children.get(key)
+    if child is None:
+        child = SparkSession(
+            spark.sparkContext, spark._jsparkSession.cloneSession()  # noqa: SLF001
+        )
+        for k, v in overrides.items():
+            child.conf.set(k, v)
+        child._nipd_overrides = {**carried, **overrides}  # noqa: SLF001
+        children[key] = child
+    return child

@@ -10,6 +10,10 @@ genuine StreamExecution (watermarks, state store and all).
 µs-timestamp fixtures stream natively as TimestampType; ns-vintage
 fixtures are read as long and converted to µs TimestampType.
 
+Streams are built on ``pinned_session``, a child session carrying the
+state-partition count and checkpoint manager, so a plain ``start()``
+pins them and the caller's session conf is never touched.
+
 Every staged artifact of the engine — the streaming family's sources,
 sinks and checkpoints, and the batch queries' staged copies, tables and
 indexes (sources.py, multimodal.py, similarity.py) — lives under one
@@ -33,6 +37,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from nipd_spark.session import child_session
+
+
 def state_partitions(spark: SparkSession) -> int:
     """Streaming state-store partition count: the session's task slots,
     ``spark.sparkContext.defaultParallelism`` (4 on a 4-core
@@ -52,68 +59,32 @@ def state_partitions(spark: SparkSession) -> int:
     return spark.sparkContext.defaultParallelism
 
 
-@contextmanager
-def pinned_state_partitions(spark: SparkSession):
-    """Temporarily pin spark.sql.shuffle.partitions to
-    ``state_partitions`` while a streaming query starts and drains, so
-    state partitioning never inherits the batch profile's shuffle width.
-
-    FALLBACK PATH ONLY: this mutates the given session's conf, so a
-    query planned concurrently on the SAME session mid-pin would
-    capture the pinned value. The harness's primary mechanism is
-    ``pinned_session`` — streams built by ``events_stream`` live on a
-    dedicated child SparkSession whose shuffle width is permanently
-    ``state_partitions``, so the caller's session conf is never touched
-    and concurrent batch planning on it is unaffected
-    (tests/test_streaming.py::test_pin_does_not_leak_to_parent). This
-    context manager remains for streams built directly on a caller's
-    session (t13's restart harness)."""
-    saved = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions(spark)))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved)
-
-
-_PIN_ATTR = "_nipd_pinned_child"
-
-
 def pinned_session(spark: SparkSession) -> SparkSession:
-    """A child SparkSession (same SparkContext, own SQLConf) with
-    spark.sql.shuffle.partitions permanently = ``state_partitions``
-    (the task-slot count).
+    """The child session streams are built on (``session.child_session``):
+    spark.sql.shuffle.partitions = ``state_partitions`` and a fork-free
+    checkpoint file manager, with the caller's session untouched.
 
     A streaming query captures its conf from ITS DataFrame's session at
     start, so building the stream here scopes the state-partition pin
-    per QUERY with zero mutation of the caller's conf — the profile's
-    batch width (2000 under 'scale') stays visible to anything planned
-    concurrently on the caller's session. Builder-time confs (timezone,
-    ANSI, AQE, Arrow — session.py) carry into child sessions via
-    initialSessionOptions, so plans differ only in shuffle width. One
-    child is cached per parent session (streaming memory-sink tables
-    are session-scoped; run_to_completion reads them from the stream's
-    own session, which is this child)."""
-    if getattr(spark, _PIN_ATTR, False):
-        return spark
-    cached = getattr(spark, "_nipd_pin_child_ref", None)
-    if cached is not None:
-        return cached
-    child = spark.newSession()
-    child.conf.set("spark.sql.shuffle.partitions", str(state_partitions(spark)))
-    # Checkpoints here are always local (scratch_root or Spark's temp
-    # dir). The default FileContext manager's rename stats each file
-    # through RawLocalFileSystem.getFileLinkStatus, which without
-    # libhadoop forks a `readlink` per checkpoint file; FileSystem's
-    # rename on the local FS is the same check-then-rename, fork-free.
-    child.conf.set(
-        "spark.sql.streaming.checkpointFileManagerClass",
-        "org.apache.spark.sql.execution.streaming.checkpointing."
-        "FileSystemBasedCheckpointFileManager",
-    )
-    setattr(child, _PIN_ATTR, True)
-    spark._nipd_pin_child_ref = child  # noqa: SLF001
-    return child
+    per QUERY: the profile's batch width (2000 under 'scale') stays
+    visible to anything planned on the caller's session, and a plain
+    ``writer.start()`` runs at the pinned width. The child is cached per
+    (parent, conf), and streaming memory-sink tables are session-scoped:
+    run_to_completion reads them from the stream's own session, which is
+    this child.
+
+    Checkpoints here are always local (scratch_root or Spark's temp
+    dir). The default FileContext manager's rename stats each file
+    through RawLocalFileSystem.getFileLinkStatus, which without
+    libhadoop forks a `readlink` per checkpoint file; FileSystem's
+    rename on the local FS is the same check-then-rename, fork-free."""
+    return child_session(spark, {
+        "spark.sql.shuffle.partitions": str(state_partitions(spark)),
+        "spark.sql.streaming.checkpointFileManagerClass":
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+    })
+
 
 def _events_raw_schema(ts_is_ns: bool) -> T.StructType:
     return T.StructType(
@@ -250,23 +221,6 @@ def state_store_provider(spark: SparkSession, provider_class: str):
         sess.conf.set(key, saved)
 
 
-def start_pinned(writer):
-    """start() a DataStreamWriter with state partitioning pinned. The
-    streaming query clones the conf of ITS DataFrame's session at
-    start: for streams from ``events_stream`` that session is the
-    pinned child and nothing needs mutating; for streams built directly
-    on a caller's session, fall back to the scoped conf flip on that
-    session only."""
-    df = getattr(writer, "_df", None)
-    sess = (
-        df.sparkSession if df is not None else SparkSession.getActiveSession()
-    )
-    if getattr(sess, _PIN_ATTR, False):
-        return writer.start()
-    with pinned_state_partitions(sess):
-        return writer.start()
-
-
 def run_to_completion(
     streaming_df: DataFrame, output_mode: str = "complete"
 ) -> DataFrame:
@@ -276,10 +230,11 @@ def run_to_completion(
     (the pinned child for events_stream-built queries)."""
     name = f"sink_{uuid.uuid4().hex[:12]}"
     spark = streaming_df.sparkSession
-    q = start_pinned(
+    q = (
         streaming_df.writeStream.outputMode(output_mode)
         .format("memory")
         .queryName(name)
+        .start()
     )
     try:
         q.processAllAvailable()

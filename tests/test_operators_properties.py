@@ -786,16 +786,12 @@ def test_connected_components_invariants(spark, sf_dir):
 def test_autosize_restores_local_defaults_on_small_tier(
     spark, monkeypatch, tmp_path
 ):
-    """Big-tier autosize must be UNDONE when a sub-floor dir is loaded
-    next (r12 ADVICE): the restore path puts back the session's OWN
-    values of the autosize keys, saved before the first big-tier write,
-    so a later small-tier action plans exactly as before — the local
-    profile's minPartitionNum=1 included, or an 8 MB scan would split
-    by core count instead of once. Conversely, interleaved big-tier
-    plans executed after a small load would silently run at the
-    session's partition count (autosize is applied at load time but
-    READ at action time; harnesses must stay tier-sequential within an
-    action window)."""
+    """Big-tier autosize lives in the tier session and never touches
+    the caller's: the tier session carries the four byte-derived
+    values, while the caller's session keeps its own values of the
+    autosize keys, so a small-tier action plans exactly as before — the
+    local profile's minPartitionNum=1 included, or an 8 MB scan would
+    split by core count instead of once."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -811,32 +807,33 @@ def test_autosize_restores_local_defaults_on_small_tier(
         lambda d: 2 * 1024**3 if d == big else 1024,
     )
     # 8 MB uncompressed: above the 4 MB openCostInBytes default, so its
-    # split count shows whether minPartitionNum came back
+    # split count shows whether minPartitionNum stayed the caller's
     scan = str(tmp_path / "scan.parquet")
     pq.write_table(
         pa.table({"x": np.arange(1_000_000, dtype=np.int64)}),
         scan, compression="none", use_dictionary=False,
     )
 
-    def splits() -> int:
-        return spark.read.parquet(scan).rdd.getNumPartitions()
+    def splits(sess) -> int:
+        return sess.read.parquet(scan).rdd.getNumPartitions()
 
     original = {k: spark.conf.get(k, None) for k in catalog.AUTOSIZE_KEYS}
     assert original["spark.sql.files.minPartitionNum"] == "1"  # local profile
-    assert splits() == 1
-    catalog.autosize(spark, big)
-    assert spark.conf.get("spark.sql.shuffle.partitions") == "128"
-    assert spark.conf.get("spark.sql.files.maxPartitionBytes") == str(
+    assert splits(spark) == 1
+    tier = catalog.tier_session(spark, big)
+    assert tier is not spark
+    assert tier.conf.get("spark.sql.shuffle.partitions") == "128"
+    assert tier.conf.get("spark.sql.files.maxPartitionBytes") == str(
         min(max(2 * 1024**3 // 128, 8 * 1024**2), 128 * 1024**2)
     )
     # r13 per-scan split floor: applied alongside the two r12 knobs
-    assert spark.conf.get("spark.sql.files.minPartitionNum") == "128"
-    assert spark.conf.get("spark.sql.files.openCostInBytes") == "1048576"
-    catalog.autosize(spark, small)
+    assert tier.conf.get("spark.sql.files.minPartitionNum") == "128"
+    assert tier.conf.get("spark.sql.files.openCostInBytes") == "1048576"
+    assert catalog.tier_session(spark, small) is spark
     assert {
         k: spark.conf.get(k, None) for k in catalog.AUTOSIZE_KEYS
     } == original
-    assert splits() == 1
+    assert splits(spark) == 1
 
 
 def test_connected_components_adjacency_matches_pairs(spark, sf_dir):
@@ -4773,12 +4770,16 @@ def test_sql14_recursive_fold_matches_python_reference(spark):
             rows.append(
                 (100 * ck + i, ck, p, _dt.datetime(2024, 1, 1 + i))
             )
-    orders = spark.createDataFrame(
-        rows,
+    schema = (
         "o_orderkey long, o_custkey long, o_totalprice double, "
-        "o_orderdate timestamp",
+        "o_orderdate timestamp"
     )
-    with mock.patch.object(_s, "load", lambda s, d, n: orders):
+    # built on the session sql14 loads through (its own child session),
+    # as catalog.load's frames are: a temp view registers in its frame's
+    # session
+    with mock.patch.object(
+        _s, "load", lambda s, d, n: s.createDataFrame(rows, schema)
+    ):
         got = {
             r.custkey: (r.n_orders, r.n_batches)
             for r in _s.sql14_recursive_cte(spark, "unused").collect()

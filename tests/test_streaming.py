@@ -148,10 +148,11 @@ def test_pin_scoped_per_query_not_session(spark, sf_dir):
             spark.sparkContext.defaultParallelism
         )
         agg = stream.groupBy("event_type").agg(F.count("*").alias("n"))
-        q = harness.start_pinned(
+        q = (
             agg.writeStream.outputMode("complete")
             .format("memory")
             .queryName("pin_probe")
+            .start()
         )
         try:
             # planned MID-PIN on the parent: must capture 13, not the
@@ -177,8 +178,8 @@ def test_results_invariant_to_state_partition_count(spark, sf_dir, monkeypatch):
     so a stateful stream's result must not depend on it: the same
     queries with the pinned child forced to 1 and to 32 state partitions
     hash identically (column-name-sorted canonical rows, as the driver
-    hashes). Each run gets a fresh child, since the count is read when
-    the child is made."""
+    hashes). Each count gets its own child, since the children are
+    cached per conf."""
     import hashlib
 
     from nipd_spark.queries.streaming_live import (
@@ -196,11 +197,9 @@ def test_results_invariant_to_state_partition_count(spark, sf_dir, monkeypatch):
         t7b_stream_stream_join,
         t8_stateful_user_tracker,
     )
-    cached = getattr(spark, "_nipd_pin_child_ref", None)
 
     def hashes(n):
         monkeypatch.setattr(harness, "state_partitions", lambda _s: n)
-        spark._nipd_pin_child_ref = None  # noqa: SLF001
         out = {}
         for fn in fns:
             df = fn(spark, sf_dir)
@@ -211,10 +210,9 @@ def test_results_invariant_to_state_partition_count(spark, sf_dir, monkeypatch):
         assert child.conf.get("spark.sql.shuffle.partitions") == str(n)
         return out
 
-    try:
-        assert hashes(1) == hashes(32)
-    finally:
-        spark._nipd_pin_child_ref = cached  # noqa: SLF001
+    # an empty child cache for this test: each count makes its own child
+    monkeypatch.setattr(spark, "_nipd_children", {}, raising=False)
+    assert hashes(1) == hashes(32)
 
 
 def test_transform_with_state_tracker(spark, sf_dir):
@@ -323,8 +321,6 @@ def test_event_time_timeout_boundary_semantics(spark, tmp_path):
         if False:
             yield pd.DataFrame()
 
-    from nipd_spark.streaming.harness import start_pinned
-
     schema = T.StructType(
         [T.StructField("k", T.LongType()), T.StructField("ts", T.TimestampType())]
     )
@@ -343,8 +339,9 @@ def test_event_time_timeout_boundary_semantics(spark, tmp_path):
         )
     )
     name = "timeout_boundary_sink"
-    q = start_pinned(
+    q = (
         out.writeStream.outputMode("update").format("memory").queryName(name)
+        .start()
     )
     try:
         q.processAllAvailable()
@@ -670,7 +667,6 @@ def test_rocksdb_state_source_reads_store_back(spark, tmp_path):
     from nipd_spark.streaming.harness import (
         ROCKSDB_PROVIDER,
         events_stream,
-        start_pinned,
         state_store_provider,
     )
 
@@ -699,7 +695,7 @@ def test_rocksdb_state_source_reads_store_back(spark, tmp_path):
             updates = stream.groupBy("user_id").applyInPandasWithState(
                 track, out_schema, state_schema, "update", "NoTimeout"
             )
-            q = start_pinned(
+            q = (
                 updates.writeStream.outputMode("update")
                 .foreachBatch(
                     lambda df, _id: df.write.format("noop")
@@ -707,6 +703,7 @@ def test_rocksdb_state_source_reads_store_back(spark, tmp_path):
                     .save()
                 )
                 .option("checkpointLocation", chk)
+                .start()
             )
             try:
                 q.processAllAvailable()

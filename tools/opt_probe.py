@@ -13,8 +13,9 @@ Env:    SPARK_GRAFT_PROFILE / SPARK_GRAFT_SHUFFLE_PARTITIONS /
         before the session is built (measurement experiments only —
         shipped defaults live in session.py).
 
-Prints one line per run plus min/median, and the session conf that
-matters (shuffle partitions, AQE) so probe logs are self-describing.
+Prints one line per run plus min/median, and the conf the query ran
+with (its tier session's shuffle partitions, AQE, split size) so probe
+logs are self-describing.
 """
 
 from __future__ import annotations
@@ -37,12 +38,12 @@ def main() -> None:
     overrides = dict(
         kv.split("=", 1) for kv in filter(None, extra.split(";"))
     )
-    # catalog.autosize rewrites shuffle.partitions/maxPartitionBytes
-    # during spec.fn at >=64MB dirs and only defers to the
-    # SPARK_GRAFT_SHUFFLE_PARTITIONS env var — disable it whenever the
-    # experiment touches the managed keys, or the probe would REPORT a
-    # conf it did not run with (r12 ADVICE item)
-    from nipd_spark.catalog import AUTOSIZE_KEYS
+    # at >=64MB dirs the query runs in a tier session whose
+    # catalog.tier_conf sets shuffle.partitions/maxPartitionBytes over
+    # the session's, deferring only to SPARK_GRAFT_SHUFFLE_PARTITIONS —
+    # disable it whenever the experiment touches the managed keys, or
+    # the overrides would not be the conf the query ran with
+    from nipd_spark.catalog import AUTOSIZE_KEYS, tier_session
 
     if overrides.keys() & set(AUTOSIZE_KEYS):
         os.environ.setdefault("NIPD_SPARK_AUTOSIZE", "0")
@@ -61,13 +62,14 @@ def main() -> None:
     times = time_runs(lambda: spec.fn(spark, sf_dir), sink, n_runs).times
     for i, dt in enumerate(times):
         print(f"run{i}: {dt:.3f}s", flush=True)
+    conf = tier_session(spark, sf_dir).conf  # the conf the query ran with
     print(
         f"{name} @ {sf_dir}: min {min(times):.3f}s  "
         f"median {statistics.median(times):.3f}s  "
         f"(sink={'toPandas' if use_pandas else 'noop'}, "
-        f"shuffle.partitions={spark.conf.get('spark.sql.shuffle.partitions')}, "
-        f"aqe={spark.conf.get('spark.sql.adaptive.enabled')}, "
-        f"maxPartitionBytes={spark.conf.get('spark.sql.files.maxPartitionBytes')})"
+        f"shuffle.partitions={conf.get('spark.sql.shuffle.partitions')}, "
+        f"aqe={conf.get('spark.sql.adaptive.enabled')}, "
+        f"maxPartitionBytes={conf.get('spark.sql.files.maxPartitionBytes')})"
     )
 
 
