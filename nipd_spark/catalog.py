@@ -12,7 +12,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from nipd_spark.session import child_session, profile
+from nipd_spark.session import adaptive, child_session
 
 TABLES = (
     "region",
@@ -59,9 +59,10 @@ BROADCAST_DIMS = frozenset({"region", "nation"})
 #
 # Both are pure functions of DATA SIZE, never of core count, so the
 # driver's lower-core bench runs plan identically and per-core scaling
-# stays measurable. Under SPARK_GRAFT_PROFILE=scale there is no tier
-# conf: AQE coalesces from the 2000-partition ceiling by advisory size —
-# the cluster-posture answer. SPARK_GRAFT_SHUFFLE_PARTITIONS (explicit
+# stays measurable. An adaptive session (session.adaptive: the scale
+# profile, or any session with AQE on) gets no tier conf: AQE coalesces
+# from the partition ceiling by advisory size — the cluster-posture
+# answer. SPARK_GRAFT_SHUFFLE_PARTITIONS (explicit
 # override) also wins; NIPD_SPARK_AUTOSIZE=0 disables entirely.
 #
 # The conf lives in a session, never in a mutation of the caller's:
@@ -94,15 +95,13 @@ def _dir_bytes(sf_dir: str) -> int:
 
 def tier_conf(sf_dir: str) -> dict[str, str]:
     """Scan-split size and shuffle-partition count from ``sf_dir``'s
-    on-disk bytes (see module comment); empty under the scale profile,
-    an explicit SPARK_GRAFT_SHUFFLE_PARTITIONS, NIPD_SPARK_AUTOSIZE=0,
-    or below the engage floor."""
+    on-disk bytes (see module comment); empty under an explicit
+    SPARK_GRAFT_SHUFFLE_PARTITIONS, NIPD_SPARK_AUTOSIZE=0, or below the
+    engage floor."""
     if os.environ.get("NIPD_SPARK_AUTOSIZE", "1") == "0":
         return {}
     if os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS"):
         return {}
-    if profile() == "scale":
-        return {}  # AQE coalesces from the ceiling by advisory size
     total = _dir_bytes(sf_dir)
     if total < _AUTOSIZE_MIN_BYTES:
         return {}
@@ -128,21 +127,9 @@ def tier_conf(sf_dir: str) -> dict[str, str]:
 
 def tier_session(spark: SparkSession, sf_dir: str) -> SparkSession:
     """The session that work on ``sf_dir`` runs in: ``spark`` itself
-    when the tier has no conf, else the cached child carrying
-    ``tier_conf(sf_dir)``."""
-    return child_session(spark, tier_conf(sf_dir))
-
-
-def is_big_tier(sf_dir: str) -> bool:
-    """True when ``sf_dir`` is at/above the autosize engage floor (r13).
-
-    The one size-gate queries may branch on for SCALE-ADAPTIVE plan
-    shapes (the same 64 MB floor autosize uses, so the driver's
-    sf<=0.1 bench/gate plans stay byte-identical while the 16x/100x
-    tiers — and any real deployment — get the shape that scales).
-    A query that branches on this MUST prove both branches equivalent
-    against its oracle (q3's big-tier test is the template)."""
-    return _dir_bytes(sf_dir) >= _AUTOSIZE_MIN_BYTES
+    when it is adaptive or the tier has no conf, else the cached child
+    carrying ``tier_conf(sf_dir)``."""
+    return child_session(spark, {} if adaptive(spark) else tier_conf(sf_dir))
 
 
 def dataset_tag(sf_dir: str, salt: str = "") -> str:

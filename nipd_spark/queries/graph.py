@@ -30,7 +30,7 @@ from nipd_spark.catalog import load
 from nipd_spark.operators.materialize import spill_checkpoint
 from nipd_spark.oracle import dround
 from nipd_spark.registry import query
-from nipd_spark.session import profile
+from nipd_spark.session import adaptive
 
 
 def _basket_pairs(spark: SparkSession, sf_dir: str, symmetric: bool) -> DataFrame:
@@ -182,11 +182,12 @@ def g1_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shuffle_hash on both edge-list sides, identical count). The hash
     # build sides are the O(edges) oriented list split across the
     # shuffle partitions (~10-30 MB per partition under autosize) —
-    # bounded as long as partition count tracks data size. LOCAL
-    # profile only: at cluster scale SMJ's graceful sort-spill is the
-    # safe default and AQE's maxShuffledHashJoinLocalMapThreshold makes
-    # the same rewrite when per-partition sizes allow.
-    if profile() != "scale":
+    # bounded as long as partition count tracks data size. Static
+    # sessions only (session.adaptive): at cluster scale SMJ's graceful
+    # sort-spill is the safe default and AQE's
+    # maxShuffledHashJoinLocalMapThreshold makes the same rewrite when
+    # per-partition sizes allow.
+    if not adaptive(spark):
         o2 = o2.hint("shuffle_hash")
         o3 = o3.hint("shuffle_hash")
     tri = (

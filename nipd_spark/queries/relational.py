@@ -16,10 +16,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from nipd_spark.catalog import is_big_tier, load
+from nipd_spark.catalog import load
 from nipd_spark.oracle import dround
 from nipd_spark.registry import query
-from nipd_spark.session import child_session, profile
+from nipd_spark.session import adaptive, child_session
 
 # --------------------------------------------------------------------------
 # Flagship: TPC-H-Q1-style pricing summary (S1 + P2 + A1 + O1)
@@ -597,24 +597,24 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fact join uses sees only orders of BUILDING-segment customers
     (~1/5) instead of ~97% of orders (guide §2.3 "shuffle fewer bytes",
     §3.2 semi-join pre-reduction). The fact-join strategy stays
-    PROFILE-SPLIT (r11 VERDICT item 2): under the default ``local``
-    profile the filtered pairing (~1/5 of orders) is itself BROADCAST,
-    so lineitem is never exchanged at all (one shared JVM — the
-    "broadcast the plan" move of guide §8.4; measured 4.5 → 4.2-4.4 s
-    fresh noop at the 100× replica, with the orderkey Exchange pair
-    gone from the plan); under ``SPARK_GRAFT_PROFILE=scale`` no
-    broadcast is forced — segment-filtered orders are still fact-sized
-    at 100 TB, so the join stays SORT-MERGE with AQE handling
-    skew/strategy, now over a 5× smaller orders side than the r11
-    plan. Top-10 via TakeOrderedAndProject (no full sort).
+    split on ``session.adaptive`` (r11 VERDICT item 2): on a static
+    session (the default ``local`` profile) the filtered pairing (~1/5
+    of orders) is itself BROADCAST, so lineitem is never exchanged at
+    all (one shared JVM — the "broadcast the plan" move of guide §8.4;
+    measured 4.5 → 4.2-4.4 s fresh noop at the 100× replica, with the
+    orderkey Exchange pair gone from the plan); on an adaptive session
+    no broadcast is forced — segment-filtered orders are still
+    fact-sized at 100 TB, so the join stays SORT-MERGE with AQE
+    handling skew/strategy, now over a 5× smaller orders side than the
+    r11 plan. Top-10 via TakeOrderedAndProject (no full sort).
     Deterministic tie-breaks (o_orderdate, l_orderkey) keep the oracle
     stable at the LIMIT boundary.
 
-    r13: ABOVE the autosize floor the query additionally switches to a
-    pre-aggregated shape — revenue aggregated by l_orderkey before any
-    join, keys-only semi filter under the local profile, date/priority
-    attached by a parallel shuffle join (see the inline comment for
-    the measured decomposition and equivalence argument).
+    One plan at every tier: r13's size-gated pre-aggregated shape
+    (revenue by l_orderkey before any join, then a shuffle join to
+    attach date/priority) was slower than this plan at sf0.01, sf0.1
+    and the 16× replica in paired 4-core runs, with identical results,
+    so it was removed.
     """
     c = load(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
     o = (
@@ -635,44 +635,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     rev = F.round(
         F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 4
     ).alias("revenue")
-    if is_big_tier(sf_dir):
-        # r13 big-tier shape (VERDICT r12 item 3; guide §2.3/§3.2). The
-        # r12 plan broadcast the FULL ~3M-row (okey, date, priority)
-        # pairing and probed it with every surviving lineitem; measured
-        # decomposition at 100×: the scan is 0.6 s, the pairing 0.9 s,
-        # the broadcast build 0.6 s — the residual ~3.3 s was the 30M
-        # probes against the wide relation + the 6M-group agg, and the
-        # serial build capped 8c→32c scaling at 1.32×. Here the probe
-        # relation shrinks to the KEYS (semi-join filter, local profile
-        # only — at cluster scale the keys stop fitting and the shuffle
-        # join's own filtering takes over), the aggregate groups by
-        # l_orderkey alone BEFORE any join (o_orderdate/o_orderpriority
-        # are functionally dependent on the unique o_orderkey, so the
-        # groups and revenue sums are identical — the 4 dp round is the
-        # established order-absorbing policy), and date/priority attach
-        # via a PARALLEL shuffle join of two aggregated/filtered sides
-        # (1.2M × 3M rows at 100×). Measured: 4.59 → 3.64 s fresh noop
-        # at 100×/32c; 8c→32c ratio 1.32 → 2.03. Below the autosize
-        # floor the r12 plan is kept byte-identical (broadcast pairing
-        # beats extra exchanges when everything fits in one task wave);
-        # tests/test_plan_quality.py proves both branches
-        # oracle-equivalent at sf0.01.
-        ok = o.select("o_orderkey")
-        if profile() != "scale":
-            ok = F.broadcast(ok)
-            li = li.join(ok, li.l_orderkey == F.col("o_orderkey"), "left_semi")
-        liagg = li.groupBy("l_orderkey").agg(rev)
-        return (
-            liagg.join(o, liagg.l_orderkey == o.o_orderkey)
-            .select("l_orderkey", "revenue", "o_orderdate", "o_orderpriority")
-            .orderBy(
-                F.col("revenue").desc(),
-                F.col("o_orderdate").asc(),
-                F.col("l_orderkey").asc(),
-            )
-            .limit(10)
-        )
-    if profile() != "scale":
+    if not adaptive(spark):
         o = F.broadcast(o)
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
@@ -742,12 +705,12 @@ def q5_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     year ~1/7, customer to the region's nations ~1/5; the latter is
     implied by c_nationkey = s_nationkey ∧ s_nationkey ∈ ASIA, so the
     result set is unchanged) — and only then joined to lineitem on
-    orderkey. Under the local profile the surviving (o_orderkey,
+    orderkey. On a static session the surviving (o_orderkey,
     c_nationkey) pairs (~1/35 of orders) are BROADCAST, so lineitem is
     never shuffled at all (measured 6.4 → 1.8 s fresh noop at the 100×
     replica; the old plan shuffle-hashed all of lineitem against the
-    year-filtered orders). Under SPARK_GRAFT_PROFILE=scale the pairing
-    is fact-sized, so no broadcast is forced: the lineitem join stays a
+    year-filtered orders). On an adaptive session (the scale profile)
+    the pairing is fact-sized, so no broadcast is forced: the lineitem join stays a
     shuffle join with AQE choosing strategy — still strictly better
     than the pre-r12 shape because the custkey exchange carries
     filtered inputs instead of applying the customer filter after the
@@ -777,9 +740,9 @@ def q5_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # identical). The custkey exchange then carries the year-filtered
     # orders (~1/7) against ~1/5 of customers, and the (o_orderkey,
     # c_nationkey) pairing that survives is ~1/35 of orders — small
-    # enough to BROADCAST under the local profile, which removes the
+    # enough to BROADCAST on a static session, which removes the
     # lineitem exchange entirely (the old plan shuffled all of lineitem
-    # on orderkey). Under SPARK_GRAFT_PROFILE=scale no hint is attached:
+    # on orderkey). On an adaptive session no hint is attached:
     # orders⋈customer is fact-sized at 100 TB, so the lineitem join
     # stays a shuffle join and AQE picks strategy/handles skew — still
     # strictly better than before, because both custkey inputs are
@@ -791,7 +754,7 @@ def q5_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     oc = orders.join(cust, orders.o_custkey == cust.c_custkey).select(
         "o_orderkey", "c_nationkey"
     )
-    if profile() != "scale":
+    if not adaptive(spark):
         oc = F.broadcast(oc)
     return (
         lineitem.join(oc, lineitem.l_orderkey == F.col("o_orderkey"))
@@ -1185,7 +1148,15 @@ def j15_bloom_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("o5_range_partition_sort", sql=None, tags=("O1", "S6"))
+@query(
+    "o5_range_partition_sort",
+    sql="""
+    SELECT count(*) AS n_rows, min(l_shipdate) AS min_key,
+           max(l_shipdate) AS max_key, CAST(0 AS BIGINT) AS n_overlaps
+    FROM lineitem
+    """,
+    tags=("O1", "S6"),
+)
 def o5_range_partition_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed total order via explicit range partitioning — the
     mechanism behind both Spark's own orderBy and the sorted-bucketed
@@ -1193,28 +1164,46 @@ def o5_range_partition_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
     cut balanced, globally ordered ranges; sortWithinPartitions orders
     each range locally; nothing ever funnels through one reducer.
 
-    Returns the per-partition evidence (pid, row count, key min/max);
-    tests/test_operators_properties.py asserts the ranges tile without
-    overlap and lose no rows — the two properties that make
-    "concatenate sorted partition files in pid order" a valid 100 TB
-    sort. Rows-only: partition boundaries come from sampling, so the
-    per-partition split (not the total order) may vary across engines.
+    Returns one row of evidence that the ranges tile: the row count
+    summed over partitions, the key min/max, and ``n_overlaps``, the
+    number of consecutive (non-empty) pids whose l_shipdate ranges
+    overlap (an earlier pid's max above the next pid's min), which must
+    be 0. Those are the two properties that make "concatenate sorted
+    partition files in pid order" a valid 100 TB sort. The cut points
+    themselves are not returned: RangePartitioner seeds its key sample
+    from the RDD id, so they depend on how many RDDs the process made
+    before. The oracle twin is the plain count/min/max with 0 overlaps.
     """
     li = load(spark, sf_dir, "lineitem")
     ranged = li.repartitionByRange(8, "l_shipdate", "l_orderkey").sortWithinPartitions(
         "l_shipdate", "l_orderkey"
     )
+    # <= 8 per-pid ranges, ordered by pid in one array; consecutive
+    # pairs are compared in place (no global window)
+    r = F.array_sort(F.collect_list(F.struct("pid", "lo", "hi")))
+    n = F.greatest(F.size("r") - 1, F.lit(0))
+    overlaps = F.filter(
+        F.zip_with(F.slice("r", 1, n), F.slice("r", 2, n), lambda a, b: a.hi > b.lo),
+        lambda x: x,
+    )
     return (
-        ranged.select(
-            F.spark_partition_id().alias("pid"), "l_shipdate", "l_orderkey"
-        )
+        ranged.select(F.spark_partition_id().alias("pid"), "l_shipdate")
         .groupBy("pid")
         .agg(
-            F.count("*").alias("n_rows"),
-            F.min("l_shipdate").alias("min_key"),
-            F.max("l_shipdate").alias("max_key"),
+            F.count("*").alias("n"),
+            F.min("l_shipdate").alias("lo"),
+            F.max("l_shipdate").alias("hi"),
         )
-        .orderBy("pid")
+        .agg(
+            F.sum("n").alias("n_rows"),
+            F.min("lo").alias("min_key"),
+            F.max("hi").alias("max_key"),
+            r.alias("r"),
+        )
+        .select(
+            "n_rows", "min_key", "max_key",
+            F.size(overlaps).cast("bigint").alias("n_overlaps"),
+        )
     )
 
 

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from nipd_spark.catalog import load
 from nipd_spark.oracle import dround, ts_us
 from nipd_spark.registry import query
-from nipd_spark.session import child_session
+from nipd_spark.session import adaptive, child_session
 
 
 @query(
@@ -46,14 +46,13 @@ def t1_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     F.window and tests/test_streaming.py pins result equality.
     """
     hour_us = 3_600_000_000
-    # Reduce side is 3,600 groups — a handful of KB. In 'scale' profile
-    # AQE coalesces the exchange by advisory size at runtime; in 'local'
-    # profile (AQE off for latency) make the same decision at plan
-    # build: the query runs in a child session with 2 reduce partitions
-    # instead of the session default, saving ~6 task launches per run
-    # on a query whose cost is the fixed action floor (see BASELINE.md
-    # methodology).
-    if spark.conf.get("spark.sql.adaptive.enabled") != "true":
+    # Reduce side is 3,600 groups — a handful of KB. On an adaptive
+    # session AQE coalesces the exchange by advisory size at runtime; on
+    # a static one make the same decision at plan build: the query runs
+    # in a child session with 2 reduce partitions instead of the session
+    # default, saving ~6 task launches per run on a query whose cost is
+    # the fixed action floor (see BASELINE.md methodology).
+    if not adaptive(spark):
         spark = child_session(spark, {"spark.sql.shuffle.partitions": "2"})
     ev = load(spark, sf_dir, "events")
     us = F.unix_micros("ts")

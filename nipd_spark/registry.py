@@ -56,10 +56,13 @@ _QUERY_MODULES = (
 # (1) this round's additions — none (optimization round, no new
 # features);
 # (2) re-checks of queries whose implementation changed since their
-# last attestation — l67/l67b (r13 late change, re-opened the frozen
+# last attestation — o5 (was rows-only; now one history-free row with
+# a DuckDB twin), q5 (its plan fork reads session.adaptive, so a
+# session with AQE on, Spark's default, drops the broadcast hint),
+# l67/l67b (r13 late change, re-opened the frozen
 # rotation per the standing rule: checkpointed cb + broadcast scoring
-# join), q3 (size-gated pre-agg shape; the big-tier
-# branch is additionally oracle-proven by the forced-gate test),
+# join), q3 (one plan at every tier: the size-gated pre-agg branch is
+# gone; like q5 and g1 it forks on session.adaptive only),
 # a4b (dedup-before-distinct-agg), g1-g4 (collect_set+explode edge
 # build, adjacency iterations, g1 closure SHJ hints), l16/l16b
 # (operators/components.py superstep loop gained mid-superstep lazy
@@ -73,7 +76,8 @@ _QUERY_MODULES = (
 # the r03-cohort remainder (f5-f8, j8, l10/l10c, the t1-t9 streaming
 # block, u1-u4, w5/w6/w8/w9) and the oldest r05 names (c10-c12;
 # c15/c16 displaced by the l67/l67b re-open — they move to the head
-# of r14's category (3)). The full-sweep ritual (tools/diffcheck.py at sf0.001
+# of r14's category (3); c11/c12 displaced by the o5/q5 re-checks
+# join them there). The full-sweep ritual (tools/diffcheck.py at sf0.001
 # AND sf0.01) still gates every query every round regardless.
 # Standing rule (adopted r11 after the r10 miss): a plan-affecting
 # change landing AFTER the round's rotation is frozen RE-OPENS the
@@ -81,6 +85,8 @@ _QUERY_MODULES = (
 # the next round if the current window can no longer cover it.
 _FRONT_QUERIES: tuple[str, ...] = (
     # (2) changed this round
+    "o5_range_partition_sort",
+    "q5_local_supplier",
     "l67_kneser_ney_logprob",
     "l67b_kneser_ney_source_profile",
     "q3_shipping_priority",
@@ -132,8 +138,6 @@ _FRONT_QUERIES: tuple[str, ...] = (
     "w9_threshold_crossing",
     # ...then the oldest r05 names
     "c10_retention_cohorts",
-    "c11_scd2_merge",
-    "c12_touch_attribution",
 )
 _MODULE_PRIORITY: tuple[str, ...] = (
     # deferred never-checked b-variants surface right after the front list

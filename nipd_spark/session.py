@@ -5,8 +5,11 @@ Pins that keep the DuckDB differential oracle stable:
   - no TIMESTAMP_NTZ inference: parquet timestamps read as TimestampType
   - ANSI mode on (Spark 4 default; DuckDB is ANSI-like)
   - Arrow enabled (pandas-UDF / toPandas fast path)
-  - AQE on with partition coalescing (right-sizes tiny-SF shuffles and
-    re-plans skew/broadcast at 100 TB alike)
+  - AQE per profile: off under ``local`` (default), on with partition
+    coalescing under ``scale`` (re-plans skew/broadcast at 100 TB)
+
+``SPARK_GRAFT_PROFILE`` is read here only, when a session is built;
+plan forks ask ``adaptive(spark)`` of the session they run in.
 
 Scale notes (100 TB): the master is NOT hardcoded — ``SPARK_GRAFT_MASTER``
 (or the ``master=`` argument) accepts any Spark master URL
@@ -25,14 +28,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
-
-
-def profile() -> str:
-    """The active profile, 'local' (default) or 'scale' (see get_spark).
-
-    Read from the env on every call, not once at session start: query
-    builders branch on it per build, and tests switch it in-session."""
-    return os.environ.get("SPARK_GRAFT_PROFILE", "local")
 
 
 def get_spark(
@@ -60,7 +55,7 @@ def get_spark(
     # (its per-stage re-planning adds ~0.1 s fixed latency per query with
     # nothing to adapt at MB scale); 'scale' = cluster/100 TB posture —
     # AQE ON for runtime coalescing, skew splitting, and plan switching.
-    prof = profile()
+    prof = os.environ.get("SPARK_GRAFT_PROFILE", "local")
     aqe = "true" if prof == "scale" else "false"
     builder = SparkSession.builder
     if master:  # empty string = defer to spark-submit's --master
@@ -101,6 +96,22 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def adaptive(spark: SparkSession) -> bool:
+    """Whether ``spark`` re-plans at runtime (``spark.sql.adaptive.enabled``,
+    on by Spark's default and under the ``scale`` profile): the one
+    question every plan fork asks (q3/q5/g1's join hints, t1's reduce
+    width, ``catalog.tier_session``'s tier conf), never the env or the
+    data size.
+
+    An adaptive session gets no forced broadcast or shuffle-hash hint
+    and no tier conf: AQE picks join strategies from runtime sizes and
+    coalesces shuffles by advisory size, where a build-time hint would
+    be a guess (a fact-sized hash build OOMs where sort-merge spills).
+    A static session has no runtime sizes, so the hints and the
+    byte-derived tier conf decide there."""
+    return spark.conf.get("spark.sql.adaptive.enabled") == "true"
 
 
 def child_session(spark: SparkSession, overrides: dict[str, str]) -> SparkSession:

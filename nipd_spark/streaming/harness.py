@@ -48,7 +48,8 @@ def state_partitions(spark: SparkSession) -> int:
     The count is captured at a stateful query's first micro-batch (and
     persisted in its checkpoint, so a restart keeps its own count).
     Inheriting the batch-oriented spark.sql.shuffle.partitions (2000
-    under SPARK_GRAFT_PROFILE=scale) would silently build 2000 state
+    on a session get_spark builds under the scale profile, whose AQE
+    never reaches a stateful stream) would silently build 2000 state
     stores and 2000 tasks per micro-batch — measured 49 s vs 3 s for t4
     at sf0.001. Batch shuffle width sizes scans, not keyed state, and
     the keyed-state volume is unknown at the first batch, when the count

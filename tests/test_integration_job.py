@@ -3,8 +3,11 @@ the exact shape an external orchestrator invokes (SURVEY.md §3.1)."""
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_spark_job_cli_roundtrip(tmp_path, sf_dir):
@@ -24,7 +27,7 @@ def test_spark_job_cli_roundtrip(tmp_path, sf_dir):
         ],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=ROOT,
         timeout=300,
     )
     assert res.returncode == 0, res.stderr[-2000:]
@@ -45,7 +48,7 @@ def test_snakefile_rule_contract(tmp_path, sf_dir):
     import os
     import re
 
-    snakefile = open("/root/repo/integration/Snakefile").read()
+    snakefile = open(os.path.join(ROOT, "integration", "Snakefile")).read()
     # the test follows the REAL rule template, not a copy: extract the
     # shell line and the first ANALYSES entry from the Snakefile text
     assert '"{SPARK_CMD} integration/spark_job.py"' in snakefile
@@ -65,7 +68,7 @@ def test_snakefile_rule_contract(tmp_path, sf_dir):
         ],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=ROOT,
         timeout=300,
     )
     assert res.returncode == 0, res.stderr[-2000:]
@@ -96,7 +99,7 @@ def test_snakemake_dry_run(sf_dir, tmp_path):
         ],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=ROOT,
         timeout=120,
     )
     assert res.returncode == 0, res.stderr[-2000:]

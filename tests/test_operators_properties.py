@@ -800,7 +800,6 @@ def test_autosize_restores_local_defaults_on_small_tier(
 
     monkeypatch.delenv("NIPD_SPARK_AUTOSIZE", raising=False)
     monkeypatch.delenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", raising=False)
-    monkeypatch.delenv("SPARK_GRAFT_PROFILE", raising=False)
     big, small = "/fake/big", "/fake/small"
     monkeypatch.setattr(
         catalog, "_dir_bytes",
@@ -1222,11 +1221,13 @@ def test_range_partition_sort_tiles(spark, sf_dir):
     from nipd_spark.catalog import load
     from nipd_spark.queries.relational import o5_range_partition_sort
 
-    rows = o5_range_partition_sort(spark, sf_dir).collect()
-    total = load(spark, sf_dir, "lineitem").count()
-    assert sum(r.n_rows for r in rows) == total
-    for a, b in zip(rows, rows[1:]):
-        assert a.max_key <= b.min_key, (a, b)
+    [row] = o5_range_partition_sort(spark, sf_dir).collect()
+    li = load(spark, sf_dir, "lineitem")
+    total, lo, hi = li.agg(
+        F.count("*"), F.min("l_shipdate"), F.max("l_shipdate")
+    ).first()
+    assert (row.n_rows, row.min_key, row.max_key) == (total, lo, hi)
+    assert row.n_overlaps == 0
 
 
 def test_pq_code_table_and_recall(spark, sf_dir):

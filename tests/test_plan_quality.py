@@ -5,6 +5,8 @@ refactor can't silently trade them away.
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -62,15 +64,15 @@ def test_q1_filter_pushdown_and_column_pruning(spark, sf_dir):
 
 
 def test_q3_broadcasts_dims_no_sort_merge(spark, sf_dir):
-    """q3's fact-join strategy is profile-split (r11 VERDICT item 2,
-    re-shaped in the r12 optimization round): under the default local
-    profile the segment-filtered orders⋈customer pairing (~1/5 of
-    orders) is broadcast, so the lineitem side is never exchanged —
-    the plan is two BroadcastHashJoins and zero fact Exchanges before
-    the aggregation; under SPARK_GRAFT_PROFILE=scale no broadcast is
-    forced and the fact join stays sort-merge (fact-sized build would
-    OOM executors). Tests run under the local profile — pin that
-    shape."""
+    """q3's fact-join strategy is split on session.adaptive (r11
+    VERDICT item 2, re-shaped in the r12 optimization round): on a
+    static session (the default local profile) the segment-filtered
+    orders⋈customer pairing (~1/5 of orders) is broadcast, so the
+    lineitem side is never exchanged — the plan is two
+    BroadcastHashJoins and zero fact Exchanges before the aggregation;
+    on an adaptive session no broadcast is forced and the fact join
+    stays sort-merge (fact-sized build would OOM executors). The test
+    session is static — pin that shape."""
     plan = _plan(spark, sf_dir, "q3_shipping_priority")
     assert "BroadcastHashJoin" in plan   # dim + pairing broadcasts
     assert "SortMergeJoin" not in plan
@@ -78,40 +80,39 @@ def test_q3_broadcasts_dims_no_sort_merge(spark, sf_dir):
     assert "CartesianProduct" not in plan
 
 
-def test_q3_scale_profile_stays_sort_merge(spark, sf_dir, monkeypatch):
+def _adaptive(spark):
+    """A child of the test session with AQE on: the session
+    ``session.adaptive`` reports true for (the scale profile, or a
+    session built outside get_spark)."""
+    from nipd_spark.session import child_session
+
+    return child_session(spark, {"spark.sql.adaptive.enabled": "true"})
+
+
+def test_q3_scale_profile_stays_sort_merge(spark, sf_dir):
     """The scale posture must NOT inherit the local shuffle_hash hint:
     a per-executor hash build of ~97%-of-orders is an OOM at 100 TB
-    where SMJ's sort spills gracefully. The hint decision is read at
-    plan-build time, so the split is testable in-session."""
-    monkeypatch.setenv("SPARK_GRAFT_PROFILE", "scale")
-    plan = _plan(spark, sf_dir, "q3_shipping_priority")
+    where SMJ's sort spills gracefully. The hint decision reads the
+    session the query runs in, so the split is testable in-process."""
+    plan = _plan(_adaptive(spark), sf_dir, "q3_shipping_priority")
     assert "ShuffledHashJoin" not in plan
     assert "CartesianProduct" not in plan
 
 
-def test_q3_big_tier_shape_oracle_equivalent(spark, monkeypatch):
-    """The r13 big-tier q3 (pre-agg by l_orderkey + keys-only semi +
-    shuffle-join attach) must return EXACTLY what the oracle returns —
-    the branch only executes at >=64MB dirs, which the sf0.01 gate
-    never reaches, so equivalence is proven here by forcing the gate.
-    Also pins the big-tier plan: aggregate BELOW the pairing join
-    (SortMergeJoin/ShuffledHashJoin allowed for the small attach join),
-    no cartesian."""
-    import nipd_spark.queries.relational as rel
-    from nipd_spark.testing import compare_spec, make_duck
+@pytest.mark.parametrize(
+    "name",
+    ["q3_shipping_priority", "q5_local_supplier", "g1_triangle_count",
+     "t1_tumbling_hourly"],
+)
+def test_adaptive_shape_matches_oracle(spark, sf_dir, duck, name):
+    """The queries that fork on ``session.adaptive`` return exactly
+    their DuckDB twin's rows on the adaptive shape too (the test
+    session is static, so the suite's sweep covers the other shape)."""
+    from nipd_spark.testing import compare_spec
 
-    sf01 = "/root/testdata/sf0.01"
-    monkeypatch.setattr(rel, "is_big_tier", lambda _sf: True)
-    spec = registry.all_specs()["q3_shipping_priority"]
-    ok, detail = compare_spec(spark, make_duck(sf01), spec, sf01)
+    spec = registry.all_specs()[name]
+    ok, detail = compare_spec(_adaptive(spark), duck, spec, sf_dir)
     assert ok, detail
-    df = spec.fn(spark, sf01)
-    plan = df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-        df._jdf.queryExecution(), "formatted"
-    )
-    assert "CartesianProduct" not in plan
-    # the revenue aggregate is keyed by l_orderkey alone (pre-join)
-    assert "Keys [1]: [l_orderkey" in plan
 
 
 def test_q5_six_way_join_shape(spark, sf_dir):
@@ -216,7 +217,7 @@ def test_plan_lint_lowcard_rule(spark, sf_dir):
 
     from nipd_spark.catalog import load
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
     import plan_lint
 
     ev = load(spark, sf_dir, "events")
@@ -254,7 +255,7 @@ def test_plan_lint_allowlist_names_exist(spark):
     query — a renamed query must not silently orphan its exemption."""
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
     import plan_lint
 
     specs = registry.all_specs()

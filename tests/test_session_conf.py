@@ -29,8 +29,7 @@ def big_sf01(monkeypatch, sf_dir):
     sf01 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
     if not os.path.isdir(sf01):
         pytest.skip("sf0.01 fixture absent")
-    for var in ("NIPD_SPARK_AUTOSIZE", "SPARK_GRAFT_SHUFFLE_PARTITIONS",
-                "SPARK_GRAFT_PROFILE"):
+    for var in ("NIPD_SPARK_AUTOSIZE", "SPARK_GRAFT_SHUFFLE_PARTITIONS"):
         monkeypatch.delenv(var, raising=False)
     real = catalog._dir_bytes
     monkeypatch.setattr(

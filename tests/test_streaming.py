@@ -377,6 +377,7 @@ def test_t20_concurrent_processes_contend_on_lock(tmp_path, sf_dir):
     and runs its checkpoint under its own scratch root
     (harness.scratch_root), so neither can see the other's part files
     or state mid-write."""
+    import os
     import subprocess
     import sys
 
@@ -397,7 +398,7 @@ def test_t20_concurrent_processes_contend_on_lock(tmp_path, sf_dir):
                 "--coalesce",
                 "1",
             ],
-            cwd="/root/repo",
+            cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
             stdout=subprocess.PIPE,
             stderr=subprocess.PIPE,
             text=True,
@@ -520,6 +521,37 @@ def test_only_scratch_root_names_a_tmp_path():
                     (path.relative_to(pkg).as_posix(), owners[-1] if owners else None)
                 )
     assert hits == [("streaming/harness.py", "scratch_root")], hits
+
+
+def test_no_query_module_reads_the_env_or_the_profile():
+    """Plan forks ask the session they run in (session.adaptive), never
+    the env: no module under nipd_spark/queries/ touches os.environ or
+    os.getenv, imports or calls a ``profile``, or names
+    SPARK_GRAFT_PROFILE in a string. No Spark needed."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "nipd_spark" / "queries"
+    hits = []
+    for path in sorted(pkg.glob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            if isinstance(node, ast.Attribute) and isinstance(node.value, ast.Name):
+                hit = node.value.id == "os" and node.attr in ("environ", "getenv")
+            elif isinstance(node, ast.ImportFrom):
+                names = {a.name for a in node.names}
+                hit = "profile" in names or (
+                    node.module == "os" and names & {"environ", "getenv"}
+                )
+            elif isinstance(node, ast.Call):
+                f = node.func
+                hit = getattr(f, "id", getattr(f, "attr", None)) == "profile"
+            elif isinstance(node, ast.Constant):
+                hit = "SPARK_GRAFT_PROFILE" in str(node.value)
+            else:
+                hit = False
+            if hit:
+                hits.append((path.name, node.lineno))
+    assert hits == [], hits
 
 
 def test_t19_boundary_corpus_matches_oracle(spark, tmp_path):

@@ -6,10 +6,11 @@ Defaults to /root/testdata/sf0.001 (fast); the driver runs sf0.01.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from nipd_spark import registry
 from nipd_spark.session import get_spark

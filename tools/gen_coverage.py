@@ -9,11 +9,13 @@ SURVEY.md totals sentence in place)
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 from collections import defaultdict
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from nipd_spark import registry
 
@@ -39,7 +41,7 @@ _TOTALS = re.compile(
 )
 
 
-def update_survey_totals(path: str = "/root/repo/SURVEY.md") -> int:
+def update_survey_totals(path: str = os.path.join(ROOT, "SURVEY.md")) -> int:
     """Count the §2.1–§2.11 table IDs and rewrite the hand-typed
     totals sentence with the derived numbers. Returns the ID count."""
     with open(path) as f:
@@ -112,7 +114,7 @@ def main() -> None:
     for tag in sorted(by_tag):
         lines.append(f"| {tag} | {', '.join(sorted(by_tag[tag]))} |")
     lines.append("")
-    with open("/root/repo/COVERAGE.md", "w") as f:
+    with open(os.path.join(ROOT, "COVERAGE.md"), "w") as f:
         f.write("\n".join(lines))
     total = update_survey_totals()
     print(

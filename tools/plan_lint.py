@@ -28,10 +28,11 @@ Run: python tools/plan_lint.py    (exit 1 on unexplained hits)
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from nipd_spark import registry
 from nipd_spark.session import get_spark
