@@ -62,8 +62,7 @@ BROADCAST_DIMS = frozenset({"region", "nation"})
 # stays measurable. An adaptive session (session.adaptive: the scale
 # profile, or any session with AQE on) gets no tier conf: AQE coalesces
 # from the partition ceiling by advisory size — the cluster-posture
-# answer. SPARK_GRAFT_SHUFFLE_PARTITIONS (explicit
-# override) also wins; NIPD_SPARK_AUTOSIZE=0 disables entirely.
+# answer.
 #
 # The conf lives in a session, never in a mutation of the caller's:
 # tier_session hands back a cached child session carrying it, and
@@ -95,13 +94,8 @@ def _dir_bytes(sf_dir: str) -> int:
 
 def tier_conf(sf_dir: str) -> dict[str, str]:
     """Scan-split size and shuffle-partition count from ``sf_dir``'s
-    on-disk bytes (see module comment); empty under an explicit
-    SPARK_GRAFT_SHUFFLE_PARTITIONS, NIPD_SPARK_AUTOSIZE=0, or below the
-    engage floor."""
-    if os.environ.get("NIPD_SPARK_AUTOSIZE", "1") == "0":
-        return {}
-    if os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS"):
-        return {}
+    on-disk bytes (see module comment); empty below the engage
+    floor."""
     total = _dir_bytes(sf_dir)
     if total < _AUTOSIZE_MIN_BYTES:
         return {}

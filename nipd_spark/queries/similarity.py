@@ -9,7 +9,7 @@ from nipd_spark.catalog import load
 from nipd_spark.operators import knn, lsh, vector
 from nipd_spark.oracle import dround
 from nipd_spark.registry import query
-from nipd_spark.streaming.harness import scratch_dir
+from nipd_spark.streaming.harness import staged
 
 _DUCK_COS = (
     "list_sum(list_transform(range(1, 65), "
@@ -616,28 +616,26 @@ def l56_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted IVF index — the offline-build / online-probe split
     that makes ANN serve at 100 TB: the index (k-means centroids +
     per-vector list assignments, both plain parquet) is trained ONCE
-    and committed with an atomic rename; the query path loads only the
-    index and the base vectors and probes — zero training cost per
-    query, and the index directory ships/caches like any other table.
+    and committed by a marker written after it (``harness.staged``);
+    the query path loads only the index and the base vectors and
+    probes — zero training cost per query, and the index directory
+    ships/caches like any other table.
     Same parameters as l5b_ann_ivf, so the output is bit-identical
     (training is deterministic) — pinned by a property test.
 
     Rows-only for the driver (probe set is approximate), inheriting
     l5b's anchors: probe-all == exact kNN and bit-exact re-rank.
     """
-    import os
-
     from nipd_spark.operators import ivf
 
-    idx = scratch_dir(sf_dir, "ivf_index")
     e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    if not os.path.exists(idx):
+
+    def write(d: str) -> None:
         cen = ivf.train_centroids(e, n_lists=8, iters=2).cache()
-        assigned = ivf.assign(e, cen)
-        tmp = idx + ".tmp"
-        cen.write.mode("overwrite").parquet(tmp + "/centroids")
-        assigned.write.mode("overwrite").parquet(tmp + "/assigned")
-        os.rename(tmp, idx)
+        cen.write.parquet(d + "/centroids")
+        ivf.assign(e, cen).write.parquet(d + "/assigned")
+
+    idx = staged(sf_dir, "ivf_index", write)
     cen = spark.read.parquet(idx + "/centroids")
     assigned = spark.read.parquet(idx + "/assigned")
     return ivf.search(

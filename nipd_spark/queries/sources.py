@@ -5,8 +5,8 @@ Reference realization [PK]: ``pandas.read_csv``/``read_table`` over
 GATK VariantsToTable / bcftools-query TSVs, and VCF-style files with
 ``##`` meta headers. Files are staged deterministically from the corpus
 itself under ``harness.scratch_dir`` (content-keyed, private to the
-process), so the DuckDB oracle can validate against the original
-tables.
+process) through ``harness.staged``, so the DuckDB oracle can validate
+against the original tables.
 """
 
 from __future__ import annotations
@@ -20,7 +20,7 @@ from pyspark.sql import types as T
 from nipd_spark.catalog import load
 from nipd_spark.registry import query
 from nipd_spark.session import child_session
-from nipd_spark.streaming.harness import scratch_dir
+from nipd_spark.streaming.harness import scratch_dir, staged
 
 
 @query(
@@ -31,12 +31,14 @@ from nipd_spark.streaming.harness import scratch_dir
 def s2_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TSV sink + source round-trip with an explicit schema (the
     variant-table TSV ingest path). No inferSchema — SURVEY.md §1.2."""
-    d = scratch_dir(sf_dir, "nation_tsv")
-    if not os.path.exists(d):
-        load(spark, sf_dir, "nation").coalesce(1).write.mode("overwrite").options(
-            sep="\t", header=True
-        ).csv(d + ".tmp")
-        os.rename(d + ".tmp", d)
+    d = staged(
+        sf_dir,
+        "nation_tsv",
+        lambda d: load(spark, sf_dir, "nation")
+        .coalesce(1)
+        .write.options(sep="\t", header=True)
+        .csv(d),
+    )
     schema = T.StructType(
         [
             T.StructField("n_nationkey", T.IntegerType()),
@@ -54,12 +56,11 @@ def s2_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def s3_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON-lines sink + source round-trip with explicit schema."""
-    d = scratch_dir(sf_dir, "supplier_json")
-    if not os.path.exists(d):
-        load(spark, sf_dir, "supplier").coalesce(1).write.mode("overwrite").json(
-            d + ".tmp"
-        )
-        os.rename(d + ".tmp", d)
+    d = staged(
+        sf_dir,
+        "supplier_json",
+        lambda d: load(spark, sf_dir, "supplier").coalesce(1).write.json(d),
+    )
     schema = T.StructType(
         [
             T.StructField("s_suppkey", T.LongType()),
@@ -93,8 +94,8 @@ def s4_semistructured_vcf(spark: SparkSession, sf_dir: str) -> DataFrame:
     INFO-style packed field (``k=<n>``) is split with str ops, exactly
     how VCF INFO is handled.
     """
-    d = scratch_dir(sf_dir, "vcfish")
-    if not os.path.exists(d):
+
+    def write(d: str) -> None:
         ev = load(spark, sf_dir, "events").filter(F.col("event_id") < 200)
         body = ev.select(
             F.concat_ws(
@@ -110,9 +111,9 @@ def s4_semistructured_vcf(spark: SparkSession, sf_dir: str) -> DataFrame:
              ("#SAMPLE\tKIND\tPOS\tINFO",)],
             "value string",
         )
-        header.unionAll(body).coalesce(1).write.mode("overwrite").text(d + ".tmp")
-        os.rename(d + ".tmp", d)
-    raw = spark.read.text(d)
+        header.unionAll(body).coalesce(1).write.text(d)
+
+    raw = spark.read.text(staged(sf_dir, "vcfish", write))
     data = raw.filter(~F.col("value").startswith("#"))
     parts = F.split("value", "\t")
     return data.select(
@@ -195,6 +196,17 @@ def s6b_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _events_by_type(spark: SparkSession, sf_dir: str) -> str:
+    """events written once hive-partitioned by event_type (s6c, s6d)."""
+    return staged(
+        sf_dir,
+        "events_by_type",
+        lambda d: load(spark, sf_dir, "events")
+        .write.partitionBy("event_type")
+        .parquet(d),
+    )
+
+
 @query(
     "s6c_partitioned_prune",
     sql=f"""
@@ -212,12 +224,7 @@ def s6c_partitioned_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     directories are never listed, let alone read (asserted in
     tests/test_plan_quality.py).
     """
-    out = f"{scratch_dir(sf_dir, 'events_by_type')}/events"
-    if not os.path.exists(f"{out}/_SUCCESS"):
-        load(spark, sf_dir, "events").write.mode("overwrite").partitionBy(
-            "event_type"
-        ).parquet(out)
-    ev = spark.read.parquet(out)
+    ev = spark.read.parquet(_events_by_type(spark, sf_dir))
     return (
         ev.filter(F.col("event_type") == "click")
         .groupBy(F.date_trunc("hour", "ts").alias("hour"))
@@ -270,10 +277,9 @@ def s7_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     original — the round-trip must preserve every value for the hash to
     match). At 100 TB the same write carries partitionBy/bucketBy; the
     scan gets the identical pushdown/pruning treatment as parquet."""
-    d = scratch_dir(sf_dir, "part_orc")
-    if not os.path.exists(d):
-        load(spark, sf_dir, "part").write.mode("overwrite").orc(d + ".tmp")
-        os.rename(d + ".tmp", d)
+    d = staged(
+        sf_dir, "part_orc", lambda d: load(spark, sf_dir, "part").write.orc(d)
+    )
     back = spark.read.orc(d)
     return back.groupBy("p_brand").agg(
         F.count("*").alias("n_parts"),
@@ -307,12 +313,7 @@ def s6d_dynamic_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is the 100 TB star-schema staple: "scan only the partitions
     the filtered dimension selects" without hand-propagating the
     filter to the fact."""
-    out = f"{scratch_dir(sf_dir, 'events_by_type')}/events"
-    if not os.path.exists(f"{out}/_SUCCESS"):
-        load(spark, sf_dir, "events").write.mode("overwrite").partitionBy(
-            "event_type"
-        ).parquet(out)
-    ev = spark.read.parquet(out)
+    ev = spark.read.parquet(_events_by_type(spark, sf_dir))
     dim = spark.createDataFrame(
         [("click", 1.0), ("purchase", 5.0), ("view", 0.5),
          ("error", 0.0), ("signup", 2.0)],
@@ -353,20 +354,18 @@ def s6e_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     touches — no full-table rewrite, no read-modify-write of unrelated
     data. (With Delta/Iceberg available, connectors.py MERGE replaces
     this at file granularity.)"""
-    base = scratch_dir(sf_dir, "s6e")
-    out, done = f"{base}/events", f"{base}/_MERGED"
-    ev = load(spark, sf_dir, "events")
-    if not os.path.exists(done):
-        ev.write.mode("overwrite").partitionBy("event_type").parquet(out)
+
+    def write(out: str) -> None:
+        ev = load(spark, sf_dir, "events")
+        ev.write.partitionBy("event_type").parquet(out)
         revised = ev.filter(F.col("event_type") == "click").withColumn(
             "value", F.col("value") * 2
         )
         revised.write.mode("overwrite").option(
             "partitionOverwriteMode", "dynamic"
         ).partitionBy("event_type").parquet(out)
-        with open(done, "w") as fh:
-            fh.write("ok")
-    merged = spark.read.parquet(out)
+
+    merged = spark.read.parquet(staged(sf_dir, "s6e", write))
     return merged.groupBy("event_type").agg(
         F.count("*").alias("n"),
         F.round(F.sum("value"), 4).alias("total_value"),
@@ -392,15 +391,18 @@ def s9_text_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: text files split by line ranges exactly like any
     file-based scan; the parse is one map-side projection.
     """
-    d = scratch_dir(sf_dir, "doc_lines")
-    if not os.path.exists(d):
-        docs = load(spark, sf_dir, "documents")
-        docs.select(
+    d = staged(
+        sf_dir,
+        "doc_lines",
+        lambda d: load(spark, sf_dir, "documents")
+        .select(
             F.concat_ws("\t", F.col("doc_id").cast("string"), F.col("text")).alias(
                 "value"
             )
-        ).coalesce(1).write.mode("overwrite").text(d + ".tmp")
-        os.rename(d + ".tmp", d)
+        )
+        .coalesce(1)
+        .write.text(d),
+    )
     lines = spark.read.text(d)
     parts = F.split(F.col("value"), "\t", 2)
     text_col = parts.getItem(1)
@@ -439,20 +441,18 @@ def s10_binary_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     blob); digesting is map-side. Media payloads take exactly this path
     into the multimodal stage (l10).
     """
-    d = scratch_dir(sf_dir, "lang_blobs")
-    if not os.path.exists(d):
-        import pyarrow.parquet as pq_mod
+    import pyarrow.parquet as pq
 
-        tmp = d + ".tmp"
-        os.makedirs(tmp, exist_ok=True)
-        t = pq_mod.read_table(
+    def write(d: str) -> None:
+        os.makedirs(d)
+        t = pq.read_table(
             f"{sf_dir}/documents.parquet", columns=["doc_id", "lang", "text"]
         ).to_pandas()
         for lang, grp in t.sort_values("doc_id").groupby("lang"):
-            with open(f"{tmp}/{lang}.txt", "w") as f:
+            with open(f"{d}/{lang}.txt", "w") as f:
                 f.write("\n".join(grp.text))
-        os.rename(tmp, d)
-    files = spark.read.format("binaryFile").load(d)
+
+    files = spark.read.format("binaryFile").load(staged(sf_dir, "lang_blobs", write))
     base = F.element_at(F.split(F.col("path"), "/"), -1)
     return files.select(
         F.split(base, "\\.").getItem(0).alias("lang"),
@@ -495,17 +495,17 @@ def s11_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout stabilizes, since footer merging at planning time costs a
     listing pass over files (use a metastore table at real scale).
     """
-    d = scratch_dir(sf_dir, "supplier_evolved")
-    sup = load(spark, sf_dir, "supplier")
-    if not os.path.exists(d):
-        tmp = d + ".tmp"
+
+    def write(d: str) -> None:
+        sup = load(spark, sf_dir, "supplier")
         sup.filter(F.col("s_suppkey") % 2 == 0).select(
             "s_suppkey", "s_nationkey"
-        ).write.mode("overwrite").parquet(tmp + "/v1")
+        ).write.parquet(d + "/v1")
         sup.filter(F.col("s_suppkey") % 2 == 1).select(
             "s_suppkey", "s_nationkey", "s_acctbal"
-        ).write.mode("overwrite").parquet(tmp + "/v2")
-        os.rename(tmp, d)
+        ).write.parquet(d + "/v2")
+
+    d = staged(sf_dir, "supplier_evolved", write)
     merged = spark.read.option("mergeSchema", "true").parquet(d + "/v1", d + "/v2")
     return merged.groupBy("s_nationkey").agg(
         F.count("*").alias("n_rows"),
@@ -552,21 +552,17 @@ def s12_zorder_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_plan_quality.py asserts the physical skip: most staged
     row groups fall entirely outside the box stats.
     """
-    d = scratch_dir(sf_dir, "lineitem_zorder")
-    li = load(spark, sf_dir, "lineitem")
-    if not os.path.exists(d):
-        z = li.withColumn(
-            "z", F.expr(_morton_expr("l_partkey", "l_suppkey"))
-        )
-        (
-            z.repartitionByRange(8, "z")
-            .sortWithinPartitions("z")
-            .drop("z")
-            .write.mode("overwrite")
-            .option("parquet.block.size", 256 * 1024)
-            .parquet(d + ".tmp")
-        )
-        os.rename(d + ".tmp", d)
+    d = staged(
+        sf_dir,
+        "lineitem_zorder",
+        lambda d: load(spark, sf_dir, "lineitem")
+        .withColumn("z", F.expr(_morton_expr("l_partkey", "l_suppkey")))
+        .repartitionByRange(8, "z")
+        .sortWithinPartitions("z")
+        .drop("z")
+        .write.option("parquet.block.size", 256 * 1024)
+        .parquet(d),
+    )
     probe = spark.read.parquet(d).filter(
         F.col("l_partkey").between(20, 59) & F.col("l_suppkey").between(2, 5)
     )
@@ -603,20 +599,16 @@ def s13_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     repair path for tables that already fragmented.
     tests/test_plan_quality.py pins shard counts and row preservation.
     """
-    frag = scratch_dir(sf_dir, "orders_fragmented")
-    compact = scratch_dir(sf_dir, "orders_compacted")
-    o = load(spark, sf_dir, "orders")
-    if not os.path.exists(frag):
-        o.repartition(64).write.mode("overwrite").parquet(frag + ".tmp")
-        os.rename(frag + ".tmp", frag)
-    if not os.path.exists(compact):
-        (
-            spark.read.parquet(frag)
-            .coalesce(2)
-            .write.mode("overwrite")
-            .parquet(compact + ".tmp")
-        )
-        os.rename(compact + ".tmp", compact)
+    frag = staged(
+        sf_dir,
+        "orders_fragmented",
+        lambda d: load(spark, sf_dir, "orders").repartition(64).write.parquet(d),
+    )
+    compact = staged(
+        sf_dir,
+        "orders_compacted",
+        lambda d: spark.read.parquet(frag).coalesce(2).write.parquet(d),
+    )
     return (
         spark.read.parquet(compact)
         .groupBy("o_orderstatus")
@@ -654,10 +646,9 @@ def s14_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     lazily), so the result caches the parsed batch first — documented
     requirement, not a workaround.
     """
-    d = scratch_dir(sf_dir, "supplier_corrupt_jsonl")
-    sup = load(spark, sf_dir, "supplier")
-    if not os.path.exists(d):
-        js = sup.select(
+
+    def write(d: str) -> None:
+        js = load(spark, sf_dir, "supplier").select(
             F.to_json(F.struct("s_suppkey", "s_name", "s_nationkey", "s_acctbal"))
             .alias("value"),
             "s_suppkey",
@@ -670,8 +661,8 @@ def s14_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.col("value"))
             .alias("value")
         )
-        lines.coalesce(1).write.mode("overwrite").text(d + ".tmp")
-        os.rename(d + ".tmp", d)
+        lines.coalesce(1).write.text(d)
+
     schema = T.StructType(
         [
             T.StructField("s_suppkey", T.LongType()),
@@ -685,7 +676,7 @@ def s14_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.read.schema(schema)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .json(d)
+        .json(staged(sf_dir, "supplier_corrupt_jsonl", write))
         .cache()
     )
     return parsed.agg(
@@ -959,23 +950,21 @@ def s16_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     computes the same from the source, so publication is proven
     lossless.
     """
-    import shutil
 
-    base = scratch_dir(sf_dir, "s16")
-    staging, published = f"{base}/staging", f"{base}/published"
-    if not os.path.exists(published):
-        shutil.rmtree(staging, ignore_errors=True)
+    def write_audit_publish(base: str) -> None:
+        staging = f"{base}/staging"
         o = load(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "O")
-        o.write.mode("overwrite").parquet(staging)
-        staged = spark.read.parquet(staging)
-        audit = staged.agg(
+        o.write.parquet(staging)
+        audit = spark.read.parquet(staging).agg(
             F.count("*").alias("n"),
             F.count_if(F.col("o_totalprice") <= 0).alias("bad_price"),
             F.count_if(F.col("o_orderkey").isNull()).alias("null_key"),
         ).first()
         assert audit.n > 0 and audit.bad_price == 0 and audit.null_key == 0, audit
-        os.rename(staging, published)  # atomic publish after clean audit
-    back = spark.read.parquet(published)
+        os.rename(staging, f"{base}/published")  # atomic publish after clean audit
+
+    base = staged(sf_dir, "s16", write_audit_publish)
+    back = spark.read.parquet(f"{base}/published")
     return (
         back.groupBy("o_orderpriority")
         .agg(
@@ -1009,15 +998,14 @@ def s17_parquet_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     present (bloom-enabled file is measurably larger than the same
     data without it) and that results are identical either way.
     """
-    out = scratch_dir(sf_dir, "s17")
-    if not os.path.exists(out):
-        (
-            load(spark, sf_dir, "orders")
-            .write.mode("overwrite")
-            .option("parquet.bloom.filter.enabled#o_orderkey", "true")
-            .option("parquet.bloom.filter.expected.ndv#o_orderkey", "200000")
-            .parquet(out)
-        )
+    out = staged(
+        sf_dir,
+        "s17",
+        lambda d: load(spark, sf_dir, "orders")
+        .write.option("parquet.bloom.filter.enabled#o_orderkey", "true")
+        .option("parquet.bloom.filter.expected.ndv#o_orderkey", "200000")
+        .parquet(d),
+    )
     back = spark.read.parquet(out)
     probes = [11, 222, 3333, 4444, 55, 666, 777, 888]
     return back.filter(F.col("o_orderkey").isin(probes)).agg(
@@ -1110,14 +1098,13 @@ def s19_compression_codecs(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan bill too (decode cost < saved IO for zstd level-default on
     text-heavy columns).
     """
-    out = scratch_dir(sf_dir, "s19")
-    if not os.path.exists(out):
-        (
-            load(spark, sf_dir, "lineitem")
-            .write.mode("overwrite")
-            .option("compression", "zstd")
-            .parquet(out)
-        )
+    out = staged(
+        sf_dir,
+        "s19",
+        lambda d: load(spark, sf_dir, "lineitem")
+        .write.option("compression", "zstd")
+        .parquet(d),
+    )
     back = spark.read.parquet(out)
     return (
         back.groupBy("l_linestatus")
@@ -1202,20 +1189,16 @@ def s20_file_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     file, so every row must be attributed to the chunk its event_id
     rank puts it in.
     """
-    import shutil
-
     import pyarrow.parquet as pq
 
-    d = scratch_dir(sf_dir, "s20")
-    if not os.path.exists(f"{d}/.staged"):
-        shutil.rmtree(d, ignore_errors=True)
+    def write(d: str) -> None:
         os.makedirs(d)
         t = pq.read_table(f"{sf_dir}/events.parquet").sort_by("event_id")
         step = (t.num_rows + 3) // 4
         for i in range(4):
             pq.write_table(t.slice(i * step, step), f"{d}/chunk{i}.parquet")
-        open(f"{d}/.staged", "w").close()
-    df = spark.read.parquet(d)
+
+    df = spark.read.parquet(staged(sf_dir, "s20", write))
     fname = F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1)
     return (
         df.select(fname.alias("file_name"), "event_id")
@@ -1678,19 +1661,17 @@ def s26_xml_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     there is no inference pre-pass over the corpus. One staged file
     here; at scale, one file per shard partition.
     """
-    d = scratch_dir(sf_dir, "doc_xml")
-    if not os.path.exists(d):
-        docs = load(spark, sf_dir, "documents")
-        (
-            docs.select("doc_id", "lang", "n_chars", "text")
-            .coalesce(1)
-            .write.mode("overwrite")
-            .format("xml")
-            .option("rootTag", "corpus")
-            .option("rowTag", "doc")
-            .save(d + ".tmp")
-        )
-        os.rename(d + ".tmp", d)
+    d = staged(
+        sf_dir,
+        "doc_xml",
+        lambda d: load(spark, sf_dir, "documents")
+        .select("doc_id", "lang", "n_chars", "text")
+        .coalesce(1)
+        .write.format("xml")
+        .option("rootTag", "corpus")
+        .option("rowTag", "doc")
+        .save(d),
+    )
     return (
         spark.read.format("xml")
         .option("rowTag", "doc")

@@ -15,10 +15,13 @@ from nipd_spark.catalog import dataset_tag, load
 from nipd_spark.oracle import dround, ts_us
 from nipd_spark.registry import query
 from nipd_spark.streaming.harness import (
+    _stage_dir,
+    drain,
     events_stream,
     pinned_session,
     run_to_completion,
     scratch_dir,
+    staged,
 )
 
 
@@ -416,33 +419,21 @@ def t9_stream_parquet_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     then a batch read-back of the sink directory via its exactly-once
     commit log (_spark_metadata). This is the production landing
     pattern at 100 TB: Kafka → filter/project → partitioned parquet,
-    with the commit log making restarts idempotent."""
-    import os
-    import shutil
+    with the commit log making restarts idempotent. Sink and checkpoint
+    are staged once per process (``harness.staged``)."""
 
-    out = scratch_dir(sf_dir, "t9")
-    chk = out + "_chk"
-    if not os.path.exists(out + "/.done"):
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(chk, ignore_errors=True)
-        stream = (
+    def write(d: str) -> None:
+        drain(
             events_stream(spark, sf_dir)
             .filter(F.col("event_type") == "purchase")
             .select("event_id", "user_id", "ts", "value")
-        )
-        q = (
-            stream.writeStream.outputMode("append")
+            .writeStream.outputMode("append")
             .format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", chk)
-            .start()
+            .option("path", f"{d}/out")
+            .option("checkpointLocation", f"{d}/chk")
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        open(out + "/.done", "w").close()
-    back = spark.read.parquet(out)
+
+    back = spark.read.parquet(f"{staged(sf_dir, 't9', write)}/out")
     return back.groupBy("user_id").agg(
         F.count("*").alias("n"), F.round(F.sum("value"), 4).alias("total_value")
     )
@@ -483,20 +474,14 @@ def t10_stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFram
 
     from nipd_spark.operators.merge import merge_into
 
-    store = scratch_dir(sf_dir, "t10v2")
-    chk = store + "_chk"
-    done = store + "/.done"
-    if not os.path.exists(done):
-        shutil.rmtree(store, ignore_errors=True)
-        shutil.rmtree(chk, ignore_errors=True)
-        os.makedirs(store, exist_ok=True)
+    def write(store: str) -> None:
+        cur = store + "/current"
 
         def merge_batch(batch: DataFrame, batch_id: int) -> None:
             part = batch.groupBy("user_id", "event_type").agg(
                 F.min("event_id").alias("first_event"),
                 F.count("*").alias("n_events"),
             )
-            cur = store + "/current"
             if os.path.exists(cur):
                 prev = batch.sparkSession.read.parquet(cur)
                 part = merge_into(
@@ -515,23 +500,22 @@ def t10_stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFram
                         "first_event": F.col("s.first_event"),
                         "n_events": F.col("s.n_events"),
                     },
+                    # the groupBy above leaves one source row per merge
+                    # key, so the cardinality guard could never fire
+                    check_cardinality=False,
                 )
             nxt = store + f"/next_{batch_id}"
             part.write.mode("overwrite").parquet(nxt)
             shutil.rmtree(cur, ignore_errors=True)
             os.rename(nxt, cur)
 
-        q = (
+        drain(
             events_stream(spark, sf_dir, parts=4, one_file_per_trigger=True)
             .writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", chk)
-            .start()
+            .option("checkpointLocation", store + "/chk")
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        open(done, "w").close()
+
+    store = staged(sf_dir, "t10", write)
     return spark.read.parquet(store + "/current").select(
         "user_id", "event_type", "first_event", "n_events"
     )
@@ -674,56 +658,49 @@ def t12_incremental_availablenow(spark: SparkSession, sf_dir: str) -> DataFrame:
     run resumes from the commit log.
     """
     import os
-    import shutil
 
-    from nipd_spark.streaming.harness import _stage_dir
+    chunks = _stage_dir(sf_dir, parts=4)  # 4 chunk files of events
 
-    staged = _stage_dir(sf_dir, parts=4)  # 4 chunk files of events
-    base = scratch_dir(sf_dir, "t12")
-    src = f"{base}_src"
-    out = f"{base}_out"
-    chk = f"{base}_chk"
+    def write(base: str) -> None:
+        src, out, chk = f"{base}/src", f"{base}/out", f"{base}/chk"
 
-    def run_once() -> None:
-        stream = (
-            pinned_session(spark).readStream.schema(
-                spark.read.parquet(staged).schema
+        def run_once() -> None:
+            stream = (
+                pinned_session(spark).readStream.schema(
+                    spark.read.parquet(chunks).schema
+                )
+                .format("parquet")
+                .load(src)
+                .filter(F.col("value") > 100)
+                .select("event_id", "event_type", "value")
             )
-            .format("parquet")
-            .load(src)
-            .filter(F.col("value") > 100)
-            .select("event_id", "event_type", "value")
-        )
-        q = (
-            stream.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()  # AvailableNow self-terminates when drained
+            q = (
+                stream.writeStream.outputMode("append")
+                .format("parquet")
+                .option("path", out)
+                .option("checkpointLocation", chk)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()  # AvailableNow self-terminates when drained
 
-    if not os.path.exists(out + "/.done"):
-        for d in (src, out, chk):
-            shutil.rmtree(d, ignore_errors=True)
         os.makedirs(src)
         parts = sorted(
-            f for f in os.listdir(staged) if f.endswith(".parquet")
+            f for f in os.listdir(chunks) if f.endswith(".parquet")
         )
         half = len(parts) // 2
         for f in parts[:half]:
-            os.symlink(f"{staged}/{f}", f"{src}/{f}")
+            os.symlink(f"{chunks}/{f}", f"{src}/{f}")
         run_once()
         n_run1 = spark.read.parquet(out).count()
         for f in parts[half:]:
-            os.symlink(f"{staged}/{f}", f"{src}/{f}")
+            os.symlink(f"{chunks}/{f}", f"{src}/{f}")
         run_once()
         n_total = spark.read.parquet(out).count()
         # run 2 appended only the delta — strictly between 0 and total
         assert 0 < n_run1 < n_total, (n_run1, n_total)
-        open(out + "/.done", "w").close()
-    back = spark.read.parquet(out)
+
+    back = spark.read.parquet(f"{staged(sf_dir, 't12', write)}/out")
     return back.groupBy("event_type").agg(
         F.count("*").alias("n"), F.round(F.sum("value"), 4).alias("total_value")
     )
@@ -755,18 +732,16 @@ def t13_stateful_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    from nipd_spark.streaming.harness import _stage_dir
-
-    staged = _stage_dir(sf_dir, parts=4)
+    chunks = _stage_dir(sf_dir, parts=4)
     base = scratch_dir(sf_dir, "t13")
-    src = f"{base}_src"
-    chk = f"{base}_chk"
+    src = f"{base}/src"
+    chk = f"{base}/chk"
     name = f"t13_sink_{dataset_tag(sf_dir, 't13')}"
     pinned = pinned_session(spark)  # the memory sink lives in its catalog
 
     def run_once() -> None:
-        agg = (
-            pinned.readStream.schema(spark.read.parquet(staged).schema)
+        drain(
+            pinned.readStream.schema(spark.read.parquet(chunks).schema)
             .format("parquet")
             .load(src)
             .groupBy("user_id")
@@ -774,33 +749,25 @@ def t13_stateful_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.count("*").alias("n"),
                 F.round(F.sum("value"), 4).alias("total_value"),
             )
-        )
-        q = (
-            agg.writeStream.outputMode("complete")
+            .writeStream.outputMode("complete")
             .format("memory")
             .queryName(name)
             .option("checkpointLocation", chk)
-            .start()
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
 
     # Rebuilt from scratch on every call: a restarted complete-mode
     # query with NO new data runs no batch, so a cached checkpoint
     # would leave a fresh session's memory sink empty. Two short
     # replay runs per call is the price of an honest restart.
-    for d in (src, chk):
-        shutil.rmtree(d, ignore_errors=True)
+    shutil.rmtree(base, ignore_errors=True)
     os.makedirs(src)
-    parts = sorted(f for f in os.listdir(staged) if f.endswith(".parquet"))
+    parts = sorted(f for f in os.listdir(chunks) if f.endswith(".parquet"))
     for f in parts[:2]:
-        os.symlink(f"{staged}/{f}", f"{src}/{f}")
+        os.symlink(f"{chunks}/{f}", f"{src}/{f}")
     run_once()  # run 1: partial state, then "crash"
     mid = pinned.table(name).count()
     for f in parts[2:]:
-        os.symlink(f"{staged}/{f}", f"{src}/{f}")
+        os.symlink(f"{chunks}/{f}", f"{src}/{f}")
     run_once()  # resume from checkpoint; drains only the delta
     assert mid <= pinned.table(name).count()  # state grew, never reset
     return pinned.table(name)
@@ -902,19 +869,8 @@ def t15_stream_multi_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-foot: Σ sink-A counts == rows(sink B) — asserted in-function
     — and sink A must equal the batch oracle.
     """
-    import os
-    import shutil
 
-    from nipd_spark.streaming.harness import events_stream
-
-    base = scratch_dir(sf_dir, "t15")
-    a_dir = f"{base}_a"
-    b_dir = f"{base}_b"
-    chk = f"{base}_chk"
-    if not os.path.exists(a_dir + "/_done"):
-        for d in (a_dir, b_dir, chk):
-            shutil.rmtree(d, ignore_errors=True)
-
+    def write(base: str) -> None:
         def fan_out(batch_df, batch_id: int) -> None:
             batch_df.persist()
             try:
@@ -923,30 +879,26 @@ def t15_stream_multi_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .agg(F.count("*").alias("n"))
                     .withColumn("batch_id", F.lit(batch_id))
                     .write.mode("append")
-                    .parquet(a_dir)
+                    .parquet(f"{base}/a")
                 )
                 (
                     batch_df.select("event_id", "user_id", "event_type")
                     .write.mode("append")
-                    .parquet(b_dir)
+                    .parquet(f"{base}/b")
                 )
             finally:
                 batch_df.unpersist()
 
-        stream = events_stream(spark, sf_dir, parts=4, one_file_per_trigger=True)
-        q = (
-            stream.filter(F.col("value") > 50)
+        drain(
+            events_stream(spark, sf_dir, parts=4, one_file_per_trigger=True)
+            .filter(F.col("value") > 50)
             .writeStream.foreachBatch(fan_out)
-            .option("checkpointLocation", chk)
-            .start()
+            .option("checkpointLocation", f"{base}/chk")
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        open(a_dir + "/_done", "w").close()
-    a = spark.read.parquet(a_dir)
-    b = spark.read.parquet(b_dir)
+
+    base = staged(sf_dir, "t15", write)
+    a = spark.read.parquet(f"{base}/a")
+    b = spark.read.parquet(f"{base}/b")
     total_a = a.agg(F.sum("n")).first()[0]
     total_b = b.count()
     assert total_a == total_b, (total_a, total_b)  # sinks cross-foot
@@ -972,45 +924,28 @@ def t16_update_mode_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     and ordered them correctly. Multi-batch replay (4 chunk files,
     one per trigger) makes the per-batch delta behavior real.
     """
-    import os
-    import shutil
 
-    from nipd_spark.streaming.harness import events_stream
-
-    base = scratch_dir(sf_dir, "t16")
-    log_dir = f"{base}_log"
-    chk = f"{base}_chk"
-    if not os.path.exists(log_dir + "/_done"):
-        for d in (log_dir, chk):
-            shutil.rmtree(d, ignore_errors=True)
-
+    def write(base: str) -> None:
         def capture(batch_df, batch_id: int) -> None:
             (
                 batch_df.withColumn("batch_id", F.lit(batch_id))
                 .write.mode("append")
-                .parquet(log_dir)
+                .parquet(f"{base}/log")
             )
 
-        agg = (
+        drain(
             events_stream(spark, sf_dir, parts=4, one_file_per_trigger=True)
             .groupBy("user_id")
             .agg(
                 F.count("*").alias("n"),
                 F.round(F.sum("value"), 4).alias("total_value"),
             )
-        )
-        q = (
-            agg.writeStream.outputMode("update")
+            .writeStream.outputMode("update")
             .foreachBatch(capture)
-            .option("checkpointLocation", chk)
-            .start()
+            .option("checkpointLocation", f"{base}/chk")
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        open(log_dir + "/_done", "w").close()
-    log = spark.read.parquet(log_dir)
+
+    log = spark.read.parquet(f"{staged(sf_dir, 't16', write)}/log")
     w = Window.partitionBy("user_id").orderBy(F.col("batch_id").desc())
     return (
         log.withColumn("rn", F.row_number().over(w))
@@ -1142,16 +1077,11 @@ def t18_stream_snapshot_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             write_snapshot(part, table)
 
-        q = (
+        drain(
             events_stream(spark, sf_dir, parts=4, one_file_per_trigger=True)
             .writeStream.foreachBatch(commit_batch)
             .option("checkpointLocation", chk)
-            .start()
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
     out = None
     for v in range(1, (latest_version(table) or 0) + 1):
         dfv = read_snapshot(spark, table, v).withColumn(
@@ -1398,18 +1328,13 @@ def t20_state_store_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rejects restarts from a checkpoint) that still forces each
     # micro-batch's full execution so state commits; the sink output
     # itself is irrelevant here — the STORE is the result.
-    q = (
+    drain(
         updates.writeStream.outputMode("update")
         .foreachBatch(
             lambda df, _id: df.write.format("noop").mode("overwrite").save()
         )
         .option("checkpointLocation", chk)
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
 
     return spark.read.format("statestore").load(chk).select(
         F.col("key.user_id").alias("user_id"),

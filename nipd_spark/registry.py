@@ -49,42 +49,45 @@ _QUERY_MODULES = (
     "graph",
 )
 
-# Verification rotation (round 13, OPTIMIZATION): the driver
-# hash-checks the FIRST 50 queries() entries per round. Every
-# registered name carries a passing (or clean rows-only) driver row
-# cumulatively, so the standing rule applies:
-# (1) this round's additions — none (optimization round, no new
-# features);
+# Verification rotation (round 14): the correctness gate hash-checks
+# the FIRST 50 queries() entries per round. Every registered name
+# carries a passing (or clean rows-only) gate row cumulatively, so the
+# standing rule applies:
+# (1) this round's additions — none (no new features);
 # (2) re-checks of queries whose implementation changed since their
-# last attestation — o5 (was rows-only; now one history-free row with
-# a DuckDB twin), q5 (its plan fork reads session.adaptive, so a
-# session with AQE on, Spark's default, drops the broadcast hint),
-# l67/l67b (r13 late change, re-opened the frozen
-# rotation per the standing rule: checkpointed cb + broadcast scoring
-# join), q3 (one plan at every tier: the size-gated pre-agg branch is
-# gone; like q5 and g1 it forks on session.adaptive only),
-# a4b (dedup-before-distinct-agg), g1-g4 (collect_set+explode edge
-# build, adjacency iterations, g1 closure SHJ hints), l16/l16b
+# last attestation — l50_gopher_rules (changed after the r13 freeze,
+# 4dbb291, never re-attested), t10 (its merge drops the cardinality
+# guard its grouped source can never trip: one shuffle and one
+# semi-join less per micro-batch), then r13's block: o5 (was
+# rows-only; now one history-free row with a DuckDB twin), q5 (its
+# plan fork reads session.adaptive, so a session with AQE on, Spark's
+# default, drops the broadcast hint), l67/l67b (checkpointed cb +
+# broadcast scoring join), q3 (one plan at every tier: the size-gated
+# pre-agg branch is gone; like q5 and g1 it forks on session.adaptive
+# only), a4b (dedup-before-distinct-agg), g1-g4 (collect_set+explode
+# edge build, adjacency iterations, g1 closure SHJ hints), l16/l16b
 # (operators/components.py superstep loop gained mid-superstep lazy
 # checkpoints — results identical, plan-affecting). Deliberately NOT
 # re-fronted: l73 — its plan_checkpoint change is call-site renaming
 # of the identical localCheckpoint(eager=False), runtime plan
 # unchanged (and it was attested r12);
-# (3) padding: the 12-name cohort DISPLACED from the r12 front
-# (d2-d9, f1-f4 — the owed re-attestations VERDICT r12 item 6 named),
-# then the LONGEST-unattested names from the CORRECTNESS_r* ledger:
-# the r03-cohort remainder (f5-f8, j8, l10/l10c, the t1-t9 streaming
-# block, u1-u4, w5/w6/w8/w9) and the oldest r05 names (c10-c12;
-# c15/c16 displaced by the l67/l67b re-open — they move to the head
-# of r14's category (3); c11/c12 displaced by the o5/q5 re-checks
-# join them there). The full-sweep ritual (tools/diffcheck.py at sf0.001
-# AND sf0.01) still gates every query every round regardless.
+# (3) padding: first the four r05 names r13 displaced (c15/c16 by the
+# l67/l67b re-open, c11/c12 by the o5/q5 re-checks), then the 12-name
+# cohort DISPLACED from the r12 front (d2-d9, f1-f4), then the
+# LONGEST-unattested names from the CORRECTNESS_r* ledger: the
+# r03-cohort remainder (f5-f8, j8, l10/l10c, the t1-t9 streaming
+# block, u1-u3). The names this round's six additions pushed off the
+# tail (u4, w5/w6/w8/w9, c10) head next round's category (3). The
+# full-sweep ritual (tools/diffcheck.py at sf0.001 AND sf0.01) still
+# gates every query every round regardless.
 # Standing rule (adopted r11 after the r10 miss): a plan-affecting
 # change landing AFTER the round's rotation is frozen RE-OPENS the
 # rotation — the changed query moves to the head of category (2) for
 # the next round if the current window can no longer cover it.
 _FRONT_QUERIES: tuple[str, ...] = (
     # (2) changed this round
+    "l50_gopher_rules",
+    "t10_stream_foreachbatch_upsert",
     "o5_range_partition_sort",
     "q5_local_supplier",
     "l67_kneser_ney_logprob",
@@ -97,7 +100,12 @@ _FRONT_QUERIES: tuple[str, ...] = (
     "g4_bfs_hops",
     "l16_dedup_clusters",
     "l16b_canonical_rep",
-    # (3a) displaced-from-r12 cohort (owed)
+    # (3a) r05 names displaced in r13 (owed)
+    "c15_ab_test_ztest",
+    "c16_pretraining_pipeline",
+    "c11_scd2_merge",
+    "c12_touch_attribution",
+    # (3b) displaced-from-r12 cohort (owed)
     "d2_pandas_udf",
     "d3_iterator_udf",
     "d4_grouped_zscore",
@@ -110,7 +118,7 @@ _FRONT_QUERIES: tuple[str, ...] = (
     "f2_datetime_funcs",
     "f3_math_funcs",
     "f4_case_ladder",
-    # (3b) longest-unattested: r03 cohort remainder...
+    # (3c) longest-unattested: r03 cohort remainder
     "f5_array_ops",
     "f6_map_ops",
     "f7_json_extract",
@@ -131,13 +139,6 @@ _FRONT_QUERIES: tuple[str, ...] = (
     "u1_union_all",
     "u2_union_distinct",
     "u3_intersect",
-    "u4_except",
-    "w5_range_frame",
-    "w6_first_last",
-    "w8_zscore",
-    "w9_threshold_crossing",
-    # ...then the oldest r05 names
-    "c10_retention_cohorts",
 )
 _MODULE_PRIORITY: tuple[str, ...] = (
     # deferred never-checked b-variants surface right after the front list

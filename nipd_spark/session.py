@@ -65,9 +65,7 @@ def get_spark(
         .appName(app_name)
         .config(
             "spark.sql.shuffle.partitions",
-            os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "8")
-            if prof == "local"
-            else "2000",
+            "8" if prof == "local" else "2000",
         )  # scale: high ceiling, AQE coalesces down by advisory size
         .config(
             # local: let file-split count be purely bytes-driven

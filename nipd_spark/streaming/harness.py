@@ -17,7 +17,10 @@ pins them and the caller's session conf is never touched.
 Every staged artifact of the engine — the streaming family's sources,
 sinks and checkpoints, and the batch queries' staged copies, tables and
 indexes (sources.py, multimodal.py, similarity.py) — lives under one
-scratch root per process (``scratch_root``/``scratch_dir``).
+scratch root per process (``scratch_root``/``scratch_dir``), and
+``staged`` alone decides when one is complete: a write that raised is
+redone on the next call, never read. ``drain`` is the one loop that
+runs a started stream until its source is exhausted.
 
 Scale notes (100 TB / production): swap the file source for Kafka and
 the memory sink for foreachBatch/parquet — the query body is unchanged.
@@ -31,11 +34,13 @@ import atexit
 import os
 import shutil
 import uuid
+from collections.abc import Callable
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter
 
 from nipd_spark.session import child_session
 
@@ -114,9 +119,9 @@ def scratch_root() -> str:
     Private to the process, so no result depends on what another
     process left under /tmp or on which tier an earlier process staged,
     and no two processes ever write the same checkpoint or stage the
-    same files. In-process reuse (the ``.done``/``.staged`` markers,
-    t20's restart) keeps a second call fast. The root of a crashed
-    process is never read by a later one; it costs only disk."""
+    same files. In-process reuse (``staged``, t20's restart) keeps a
+    second call fast. The root of a crashed process is never read by a
+    later one; it costs only disk."""
     global _SCRATCH_ROOT
     if _SCRATCH_ROOT is None:
         root = f"/tmp/nipd_run_{os.getpid()}_{uuid.uuid4().hex[:8]}"
@@ -140,30 +145,46 @@ def scratch_dir(sf_dir: str, salt: str) -> str:
     return os.path.join(scratch_root(), dataset_tag(sf_dir, salt))
 
 
+def staged(sf_dir: str, salt: str, write: Callable[[str], None]) -> str:
+    """``scratch_dir(sf_dir, salt)``, written once per process: unless
+    its sibling marker ``<dir>.done`` exists, the directory is removed,
+    ``write(dir)`` fills it, and only then is the marker created. A
+    write that raised (an aborted Spark job leaves ``<dir>/_temporary``)
+    leaves no marker, so the next call starts it over instead of reading
+    the remains. ``write`` keeps everything it creates under ``dir``, a
+    stream's sink and checkpoint alike, so the one removal never leaves
+    a stale checkpoint beside an emptied sink."""
+    d = scratch_dir(sf_dir, salt)
+    marker = d + ".done"
+    if not os.path.exists(marker):
+        shutil.rmtree(d, ignore_errors=True)
+        write(d)
+        open(marker, "w").close()
+    return d
+
+
 def _stage_dir(sf_dir: str, parts: int = 1) -> str:
     """The parquet file source requires a *directory*; testdata is a flat
-    read-only file. Stage one under ``scratch_dir`` (idempotent within
-    the process): a symlink for parts=1, or the file split into
-    ``parts`` chunk files so maxFilesPerTrigger=1 yields a real
-    multi-micro-batch replay for stateful operators."""
+    read-only file. Stage one under ``staged``: a symlink for parts=1,
+    or the file split into ``parts`` chunk files so maxFilesPerTrigger=1
+    yields a real multi-micro-batch replay for stateful operators."""
     import pyarrow.parquet as pq
 
-    d = scratch_dir(sf_dir, f"stage{parts}")
     src = f"{sf_dir}/events.parquet"
-    if parts == 1:
-        os.makedirs(d, exist_ok=True)
-        link = f"{d}/events.parquet"
-        if not os.path.exists(link):
-            os.symlink(src, link)
-        return d
-    done = f"{d}/.staged"
-    if not os.path.exists(done):
-        os.makedirs(d, exist_ok=True)
+
+    def write(d: str) -> None:
+        os.makedirs(d)
+        if parts == 1:
+            os.symlink(src, f"{d}/events.parquet")
+            return
         t = pq.read_table(src)
         step = (t.num_rows + parts - 1) // parts
         for i in range(parts):
             pq.write_table(t.slice(i * step, step), f"{d}/part{i:04d}.parquet")
-        open(done, "w").close()
+
+    d = staged(sf_dir, f"stage{parts}", write)
+    if parts == 1:
+        return d
     # pin micro-batch ORDER: FileStreamSource takes unseen files oldest
     # first, so give part files strictly increasing mtimes (re-stamped
     # idempotently — sub-second writes can otherwise tie). Queries whose
@@ -171,9 +192,7 @@ def _stage_dir(sf_dir: str, parts: int = 1) -> str:
     # order-invariant merges (t10) don't but lose nothing.
     base = 1_600_000_000
     for i in range(parts):
-        p = f"{d}/part{i:04d}.parquet"
-        if os.path.exists(p):
-            os.utime(p, (base + 10 * i, base + 10 * i))
+        os.utime(f"{d}/part{i:04d}.parquet", (base + 10 * i, base + 10 * i))
     return d
 
 
@@ -222,6 +241,17 @@ def state_store_provider(spark: SparkSession, provider_class: str):
         sess.conf.set(key, saved)
 
 
+def drain(writer: DataStreamWriter) -> None:
+    """Start ``writer`` and run its micro-batches until the source is
+    exhausted (``processAllAvailable``); the query is stopped however
+    that ends."""
+    q = writer.start()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+
 def run_to_completion(
     streaming_df: DataFrame, output_mode: str = "complete"
 ) -> DataFrame:
@@ -230,15 +260,9 @@ def run_to_completion(
     session-scoped, so the table is read back from the STREAM's session
     (the pinned child for events_stream-built queries)."""
     name = f"sink_{uuid.uuid4().hex[:12]}"
-    spark = streaming_df.sparkSession
-    q = (
+    drain(
         streaming_df.writeStream.outputMode(output_mode)
         .format("memory")
         .queryName(name)
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return streaming_df.sparkSession.table(name)

@@ -798,8 +798,6 @@ def test_autosize_restores_local_defaults_on_small_tier(
 
     from nipd_spark import catalog
 
-    monkeypatch.delenv("NIPD_SPARK_AUTOSIZE", raising=False)
-    monkeypatch.delenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", raising=False)
     big, small = "/fake/big", "/fake/small"
     monkeypatch.setattr(
         catalog, "_dir_bytes",

@@ -25,12 +25,10 @@ def _sql_conf(spark) -> dict[str, str]:
 @pytest.fixture
 def big_sf01(monkeypatch, sf_dir):
     """sf0.01 sized as a 2 GiB tier (the 16x/100x replicas' path), on the
-    default local profile with autosize on."""
+    default local profile."""
     sf01 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
     if not os.path.isdir(sf01):
         pytest.skip("sf0.01 fixture absent")
-    for var in ("NIPD_SPARK_AUTOSIZE", "SPARK_GRAFT_SHUFFLE_PARTITIONS"):
-        monkeypatch.delenv(var, raising=False)
     real = catalog._dir_bytes
     monkeypatch.setattr(
         catalog, "_dir_bytes", lambda d: GIB2 if d == sf01 else real(d)

@@ -4,6 +4,7 @@ streaming results must equal their batch twins.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from nipd_spark.catalog import load
@@ -521,6 +522,77 @@ def test_only_scratch_root_names_a_tmp_path():
                     (path.relative_to(pkg).as_posix(), owners[-1] if owners else None)
                 )
     assert hits == [("streaming/harness.py", "scratch_root")], hits
+
+
+def test_only_staged_names_a_completion_marker():
+    """harness.staged alone decides when a staged artifact is complete:
+    of all string constants in nipd_spark/ outside docstrings, the only
+    one naming a completion marker (``.done``, ``_done``, ``.staged``,
+    ``_SUCCESS``, ``_MERGED``) is staged's own. No Spark needed."""
+    import ast
+    import pathlib
+
+    markers = (".done", "_done", ".staged", "_SUCCESS", "_MERGED")
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "nipd_spark"
+    hits = []
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text(), filename=str(path))
+        scopes = [
+            n
+            for n in ast.walk(tree)
+            if isinstance(n, (ast.Module, ast.FunctionDef, ast.ClassDef))
+        ]
+        docstrings = {
+            id(s.body[0].value)
+            for s in scopes
+            if s.body
+            and isinstance(s.body[0], ast.Expr)
+            and isinstance(s.body[0].value, ast.Constant)
+        }
+        funcs = [n for n in scopes if isinstance(n, ast.FunctionDef)]
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Constant)
+                and isinstance(node.value, str)
+                and id(node) not in docstrings
+                and any(m in node.value for m in markers)
+            ):
+                owners = [
+                    f.name for f in funcs if f.lineno <= node.lineno <= f.end_lineno
+                ]
+                hits.append(
+                    (path.relative_to(pkg).as_posix(), owners[-1] if owners else None)
+                )
+    assert hits == [("streaming/harness.py", "staged")], hits
+
+
+@pytest.mark.parametrize(
+    "name, salt",
+    [
+        ("s17_parquet_bloom_filter", "s17"),
+        ("s19_compression_codecs", "s19"),
+        ("t9_stream_parquet_sink", "t9"),
+    ],
+)
+def test_aborted_stage_is_rewritten(
+    name, salt, spark, duck, sf_dir, tmp_path, monkeypatch
+):
+    """An aborted Spark write leaves ``<dir>/_temporary`` behind. A
+    query whose stage holds only that must write its stage again and
+    match its oracle, not read the remains (s17 and s19 once took the
+    directory's existence for completion and failed with
+    UNABLE_TO_INFER_SCHEMA for the rest of the process). The scratch
+    root is a fresh one, so this is the stage's first call."""
+    import os
+
+    from nipd_spark import registry
+    from nipd_spark.streaming import harness
+    from nipd_spark.testing import compare_spec
+
+    monkeypatch.setattr(harness, "_SCRATCH_ROOT", str(tmp_path))
+    os.makedirs(os.path.join(harness.scratch_dir(sf_dir, salt), "_temporary", "0"))
+    ok, detail = compare_spec(spark, duck, registry.all_specs()[name], sf_dir)
+    assert ok, f"{name}: {detail}"
 
 
 def test_no_query_module_reads_the_env_or_the_profile():

@@ -7,11 +7,12 @@ optimizer prune the query).
 
 Usage:  python tools/opt_probe.py <query> [sf_dir] [n_runs] [--pandas]
 
-Env:    SPARK_GRAFT_PROFILE / SPARK_GRAFT_SHUFFLE_PARTITIONS /
-        SPARK_GRAFT_CPUS respected via nipd_spark.session.
-        NIPD_OPT_CONF="k=v;k=v" applies extra session conf overrides
-        before the session is built (measurement experiments only —
-        shipped defaults live in session.py).
+Env:    SPARK_GRAFT_PROFILE / SPARK_GRAFT_CPUS respected via
+        nipd_spark.session.
+        NIPD_OPT_CONF="k=v;k=v" applies extra runtime conf overrides to
+        the session the query runs in, its tier session (measurement
+        experiments only — shipped defaults live in session.py and
+        catalog.tier_conf).
 
 Prints one line per run plus min/median, and the conf the query ran
 with (its tier session's shuffle partitions, AQE, split size) so probe
@@ -38,23 +39,17 @@ def main() -> None:
     overrides = dict(
         kv.split("=", 1) for kv in filter(None, extra.split(";"))
     )
-    # at >=64MB dirs the query runs in a tier session whose
-    # catalog.tier_conf sets shuffle.partitions/maxPartitionBytes over
-    # the session's, deferring only to SPARK_GRAFT_SHUFFLE_PARTITIONS —
-    # disable it whenever the experiment touches the managed keys, or
-    # the overrides would not be the conf the query ran with
-    from nipd_spark.catalog import AUTOSIZE_KEYS, tier_session
-
-    if overrides.keys() & set(AUTOSIZE_KEYS):
-        os.environ.setdefault("NIPD_SPARK_AUTOSIZE", "0")
-
     from nipd_spark import registry
+    from nipd_spark.catalog import tier_session
     from nipd_spark.profile import collect, noop, time_runs
     from nipd_spark.session import get_spark
 
     spark = get_spark("opt-probe")
+    # the session the query runs in (at >=64MB dirs a child carrying
+    # catalog.tier_conf), so the overrides win over the tier's values
+    conf = tier_session(spark, sf_dir).conf
     for k, v in overrides.items():
-        spark.conf.set(k, v)  # runtime confs only; static confs raise here
+        conf.set(k, v)  # runtime confs only; static confs raise here
     spec = registry.all_specs()[name]
 
     sink = collect if use_pandas else noop
@@ -62,7 +57,6 @@ def main() -> None:
     times = time_runs(lambda: spec.fn(spark, sf_dir), sink, n_runs).times
     for i, dt in enumerate(times):
         print(f"run{i}: {dt:.3f}s", flush=True)
-    conf = tier_session(spark, sf_dir).conf  # the conf the query ran with
     print(
         f"{name} @ {sf_dir}: min {min(times):.3f}s  "
         f"median {statistics.median(times):.3f}s  "
